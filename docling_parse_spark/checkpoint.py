@@ -1,10 +1,12 @@
 """Resumable per-partition checkpoints with lineage + metrics (north rule).
 
 The corpus is split into ``buckets`` by ``pmod(xxhash64(doc_id), B)``; each
-bucket runs as an independent mini-job that writes its spans + metrics and
-then appends a commit record. A resumed run skips committed buckets — the
-failure domain is one bucket, and a re-run of a committed bucket is a no-op
-(idempotent by construction: deterministic input slice + overwrite write).
+bucket runs as ONE Spark job that decodes, writes its spans and reports its
+accounting through an ``Observation`` on the decoded units; the driver then
+writes the bucket's one-row metrics file and appends a commit record. A
+resumed run skips committed buckets — the failure domain is one bucket, and a
+re-run of a committed bucket is a no-op (idempotent by construction:
+deterministic input slice + overwrite write).
 
 This is the batch analog the north rule asks for (Structured Streaming's
 checkpoint dir is the built-in equivalent; SURVEY.md §4). The commit log is a
@@ -15,14 +17,39 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
-from pyspark.sql import DataFrame, functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, functions as F
 
-from docling_parse_spark.extract import extract_spans
+from docling_parse_spark.extract import STAGE_KEYS, accounting_aggs, decoded_units, reassemble
 from docling_parse_spark.pdf.page import DecodeConfig
 
 COMMIT_LOG = "_commits.jsonl"
+
+# the one-row-per-bucket metrics file (FIXTURES.md §3, extract.accounting_aggs
+# names); an explicit schema so every bucket, empty or not, reads back alike
+_COUNTS = ("pages_parsed", "cells_emitted", "decode_failures")
+_MS_TOTALS = tuple(f"{k}_ms_total" for k in ("decode",) + STAGE_KEYS)
+METRICS_SCHEMA = pa.schema(
+    [("partition_id", pa.int32()), ("doc_id_min", pa.string()), ("doc_id_max", pa.string())]
+    + [(c, pa.int64()) for c in _COUNTS]
+    + [(c, pa.float64()) for c in _MS_TOTALS]
+    + [("lineage", pa.string())]
+)
+
+
+def _observed(obs: Observation) -> dict:
+    """The bucket's accounting row. An empty bucket has no row: AQE prunes
+    the observed subtree once its input shuffle turns out empty, the JVM
+    then reports an empty row, and ``Observation.get`` cannot convert it —
+    so that case is detected up front and reported as zeros."""
+    if obs._jo.getRow().length() == 0:
+        return {"doc_id_min": None, "doc_id_max": None,
+                **dict.fromkeys(_COUNTS, 0), **dict.fromkeys(_MS_TOTALS, 0.0)}
+    return obs.get
 
 
 def input_signature_of(docs_df: DataFrame) -> str | None:
@@ -106,20 +133,20 @@ def run_with_checkpoint(
         t0 = time.time()
         slice_df = bucketed.filter(F.col("bucket") == b).drop("bucket")
         lineage = f"{run_id}/bucket={b}"
-        spans, metrics = extract_spans(
-            slice_df, config=config, num_partitions=num_partitions,
-            with_metrics=True, lineage=lineage,
+        obs = Observation()
+        decoded = decoded_units(slice_df, config=config, num_partitions=num_partitions)
+        reassemble(decoded.observe(obs, *accounting_aggs())).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(out_dir, "spans", f"bucket={b}"))
+        m = _observed(obs)
+        metrics_dir = os.path.join(out_dir, "metrics", f"bucket={b}")
+        shutil.rmtree(metrics_dir, ignore_errors=True)
+        os.makedirs(metrics_dir)
+        pq.write_table(
+            pa.Table.from_pylist([{**m, "partition_id": b, "lineage": lineage}],
+                                 schema=METRICS_SCHEMA),
+            os.path.join(metrics_dir, "part-00000.parquet"),
         )
-        spans_path = os.path.join(out_dir, "spans", f"bucket={b}")
-        metrics_path = os.path.join(out_dir, "metrics", f"bucket={b}")
-        spans.write.mode("overwrite").parquet(spans_path)
-        metrics.write.mode("overwrite").parquet(metrics_path)
-        m = metrics.agg(
-            F.sum("pages_parsed").alias("pages"),
-            F.sum("cells_emitted").alias("cells"),
-            F.sum("decode_failures").alias("failures"),
-        ).collect()[0]
-        spans.persisted_source.unpersist()
         _append_commit(
             out_dir,
             {
@@ -128,9 +155,7 @@ def run_with_checkpoint(
                 "input_signature": input_signature,
                 "run_id": run_id,
                 "lineage": lineage,
-                "pages_parsed": int(m["pages"] or 0),
-                "cells_emitted": int(m["cells"] or 0),
-                "decode_failures": int(m["failures"] or 0),
+                **{c: int(m[c]) for c in _COUNTS},
                 "wall_sec": round(time.time() - t0, 3),
                 "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             },

@@ -390,10 +390,10 @@ def doc_to_units(doc_id: str, spans: list[dict], serialize: bool = True) -> list
 
     ``serialize=False`` keeps each unit's resources as the built dict instead
     of a JSON string — for in-process consumers (``decode_document``, the
-    fused light-doc path in ``decode_routed``) that hand the unit straight to
+    fused light-doc path in ``extract.decode``) that hand the unit straight to
     ``decode_unit``, skipping a dumps+loads round trip per page. Units that
-    cross the Arrow boundary (``explode_units``) need the default string form
-    (the work-unit schema declares ``resources string``)."""
+    cross the Arrow boundary (``extract.route_units``) need the default string
+    form (the routed schema declares ``resources string``)."""
     # a NULL spans array (nullable in the table schema) is an empty doc,
     # not a task-killing TypeError (round-4 review)
     spans = spans if spans is not None else []

@@ -3,109 +3,203 @@
 Plan shape (SURVEY.md §7, Catalyst-friendly — scan → narrow UDF → shuffle →
 UDF → groupBy/sort_array → sink):
 
-1. ``explode_units``: ``mapInPandas`` splits each doc into self-contained
-   work units at PDF-page granularity — the skew/salting step. A 6400-page
-   doc becomes 6400 independent units instead of one straggler task
-   (reference analog: the page-level task queue,
-   src/pybind/docling_threaded_base.h:104-105).
+1. ``route_units``: ``mapInPandas`` single-scan skew routing, the only
+   router. Light docs pass through whole (one ``__doc__`` row, decoded
+   fused); heavier docs split into self-contained work units at PDF-page
+   granularity — the skew/salting step. A 6400-page doc becomes 6400
+   independent units instead of one straggler task (reference analog: the
+   page-level task queue, src/pybind/docling_threaded_base.h:104-105).
+   ``SPLIT_ALL`` as the threshold splits every doc.
 2. ``repartition(n, doc_id, page)``: hash shuffle spreads units uniformly
    across executors regardless of document skew.
-3. ``decode_units``: ``mapInPandas`` runs the pure-Python kernels per unit,
-   emitting ONE row per unit carrying the unit's ordered span ARRAY — the
-   reassembly shuffle then moves O(pages) rows, not O(spans) rows (~90×
-   fewer rows for the same bytes; measured ~1.4× end-to-end at local[32]).
+3. ``decode``: ONE ``mapInArrow`` pass runs the pure-Python kernels per unit
+   (``document.decode_unit``, the same call the sequential oracle makes),
+   emitting ONE row per unit: the unit's ordered span ARRAY plus flat
+   accounting columns (``DECODED_DDL``). The reassembly shuffle then
+   moves O(pages) rows, not O(spans) rows (~90× fewer rows for the same
+   bytes; measured ~1.4× end-to-end at local[32]).
 4. ``reassemble``: ``groupBy(doc_id).agg(sort_array(collect_list(struct(page,
    spans))))`` — deterministic content order from the (page) key, never from
-   partition arrival order — then ``flatten`` + an index-stamping
-   ``transform`` assigns dense offsets. All JVM-side.
+   partition arrival order — then one Arrow pass flattens and stamps dense
+   offsets.
 
-Metrics (pages_parsed / cells_emitted / decode_failures per partition) are
-derived relationally from the same decoded rows (``failed`` flag column).
+Metrics (pages_parsed / cells_emitted / decode_failures / stage times) are a
+plain aggregate (``accounting_aggs``) over the accounting columns of the same
+decoded rows: per partition in ``metrics_table``, or as an ``Observation`` on
+the decode in checkpoint.py. Nothing is persisted.
 """
 
 from __future__ import annotations
 
-import json
 import time
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from docling_parse_spark.document import decode_unit, doc_to_units
 from docling_parse_spark.pdf.page import DecodeConfig
-from docling_parse_spark.schemas import WORK_UNIT_DDL
 
+# per-stage timing keys, one ``<key>_ms`` column each (reference pdf_timings
+# parity, src/parse/utils/pdf_timings.h:32-99: decode_resources,
+# decode_contents [tokenize+interpret], decode_annots, create_word/line_cells
+# ≙ merge); null when the stage did not run for the unit
+STAGE_KEYS = ("resources", "tokenize", "interpret", "merge", "annots", "html")
+
+# one row per decoded unit: its span array, then the unit's accounting —
+# cells emitted, failure flag, UnitResult.error (null when OK), wall ms of
+# decode_unit and one ms column per stage
 DECODED_DDL = (
     "doc_id string, page int, "
     "unit_spans array<struct<kind:string,text:string,media_ref:string>>, "
-    "cells int, failed boolean, decode_ms double, stage_ms map<string,double>"
+    "cells int, failed boolean, error string, decode_ms double, "
+    + ", ".join(f"{k}_ms double" for k in STAGE_KEYS)
 )
-
-# per-stage timing keys carried in stage_ms (reference pdf_timings parity,
-# src/parse/utils/pdf_timings.h:32-99: decode_resources, decode_contents
-# [tokenize+interpret], decode_annots, create_word/line_cells ≙ merge)
-STAGE_KEYS = ("resources", "tokenize", "interpret", "merge", "annots", "html")
 
 # routed rows: either a whole light doc (unit_kind='__doc__', doc_spans set)
 # or one heavy-doc page unit (payload/resources set) — union schema so the
-# light/heavy split needs only ONE scan of the input (VERDICT r01 §perf)
+# light/heavy split needs only ONE scan of the input (VERDICT r01 §perf).
+# ``page`` is the deterministic content-order key: reassembly sorts on it,
+# never on partition arrival order (the reference re-sorts threaded
+# completion-order results the same way: docling_parse/pdf_parser.py:1583-1602).
 ROUTED_DDL = (
     "doc_id string, page int, unit_kind string, payload string, resources string, "
     "doc_spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 )
 
+SPLIT_ALL = -1  # route_units threshold that splits every doc into its units
 
-def explode_units(docs_df: DataFrame) -> DataFrame:
-    """Split docs into per-page work units (cheap string routing, no decode)."""
 
-    def split_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def route_units(docs_df: DataFrame, heavy_span_threshold: int) -> DataFrame:
+    """Single-scan skew routing (cheap string work, no decode): light docs
+    pass through whole (one row, spans attached) so their decode stays fused;
+    docs over ``heavy_span_threshold`` input spans are split to page units so
+    one mega-doc never serializes a task (SURVEY.md §7.4 #4)."""
+
+    def route(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
                 # Arrow delivers array<struct> elements as plain dicts with
-                # exactly the schema keys — no per-span rebuild needed
-                rows.extend(doc_to_units(doc_id, spans))
+                # exactly the doc_spans schema keys — pass them through;
+                # routing itself needs only the span count. A NULL spans
+                # array is an empty doc, not a crash (round-4 review).
+                if spans is None:
+                    spans = []
+                if len(spans) <= heavy_span_threshold:
+                    rows.append(
+                        {"doc_id": doc_id, "page": 0, "unit_kind": "__doc__",
+                         "payload": None, "resources": None, "doc_spans": list(spans)}
+                    )
+                else:
+                    for unit in doc_to_units(doc_id, spans):
+                        unit = dict(unit)
+                        unit["doc_spans"] = None
+                        rows.append(unit)
             yield pd.DataFrame(
-                rows, columns=["doc_id", "page", "unit_kind", "payload", "resources"]
+                rows, columns=["doc_id", "page", "unit_kind", "payload", "resources", "doc_spans"]
             )
 
-    return docs_df.mapInPandas(split_batches, schema=WORK_UNIT_DDL)
+    return docs_df.mapInPandas(route, schema=ROUTED_DDL)
 
 
-def decode_units(units_df: DataFrame, config: DecodeConfig | None = None) -> DataFrame:
-    """Run the decode kernels over work units. One output row per unit:
-    the unit's ordered span array + cells count + failure flag."""
-    cfg = config or DecodeConfig()
-    cfg_dict = cfg.__dict__.copy()
+def decode(routed_df: DataFrame, config: DecodeConfig | None = None) -> DataFrame:
+    """The one decode pass over ``route_units`` rows, Arrow-native
+    (``mapInArrow``): '__doc__' rows run the fused per-doc loop, unit rows
+    decode individually. One output row per decoded unit (``DECODED_DDL``).
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    Input columns convert to Python lists once per batch; output spans
+    accumulate as flat kind/text/ref lists + offsets assembled with
+    ``pa.StructArray``/``pa.ListArray.from_arrays`` — one vectorized C
+    construction per batch, no per-row struct conversion (guide §4.2). The
+    flat accounting columns cost a few list appends per unit. Failed units
+    contribute an empty span array and their ``error``."""
+    cfg_dict = (config or DecodeConfig()).__dict__.copy()
+
+    def run(batches):
+        import pyarrow as pa
+
+        span_t = pa.struct(
+            [("kind", pa.string()), ("text", pa.string()), ("media_ref", pa.string())]
+        )
+        span_fields = [span_t.field(i) for i in range(3)]
+        out_schema = pa.schema(
+            [("doc_id", pa.string()), ("page", pa.int32()),
+             ("unit_spans", pa.list_(span_t)), ("cells", pa.int32()),
+             ("failed", pa.bool_()), ("error", pa.string()),
+             ("decode_ms", pa.float64())]
+            + [(f"{k}_ms", pa.float64()) for k in STAGE_KEYS]
+        )
         config_local = DecodeConfig(**cfg_dict)
         fonts_cache: dict = {}
-        for pdf in batches:
-            out_rows = []
-            for doc_id, page, unit_kind, payload, resources in zip(
-                pdf["doc_id"], pdf["page"], pdf["unit_kind"], pdf["payload"], pdf["resources"]
-            ):
-                t0 = time.perf_counter()
-                ur = decode_unit(
-                    unit_kind, payload, int(page), resources, config_local, fonts_cache
-                )
-                ms = (time.perf_counter() - t0) * 1000.0
-                spans = [
-                    {"kind": k, "text": t, "media_ref": r} for _, k, t, r in ur.spans
-                ]
-                out_rows.append(
-                    (doc_id, int(page), spans, ur.cells_emitted, ur.failed, ms,
-                     ur.timings or {})
-                )
-            yield pd.DataFrame(
-                out_rows,
-                columns=["doc_id", "page", "unit_spans", "cells", "failed",
-                         "decode_ms", "stage_ms"],
+        clock = time.perf_counter
+        for batch in batches:
+            doc_ids = batch.column("doc_id").to_pylist()
+            pages = batch.column("page").to_pylist()
+            kinds_in = batch.column("unit_kind").to_pylist()
+            payloads = batch.column("payload").to_pylist()
+            resources = batch.column("resources").to_pylist()
+            doc_spans = batch.column("doc_spans").to_pylist()
+            o_doc: list = []
+            o_page: list = []
+            offsets = [0]
+            f_kind: list = []
+            f_text: list = []
+            f_ref: list = []
+            cells: list = []
+            failed: list = []
+            errors: list = []
+            ms: list = []
+            stage_ms: list = [[] for _ in STAGE_KEYS]
+            for i, doc_id in enumerate(doc_ids):
+                unit_kind = kinds_in[i]
+                if unit_kind == "__doc__":
+                    # fused light doc: in-process hand-off, resources stay
+                    # dicts (no JSON dumps+loads per page)
+                    units = doc_to_units(doc_id, doc_spans[i], serialize=False)
+                else:
+                    units = [{"unit_kind": unit_kind, "payload": payloads[i],
+                              "page": pages[i], "resources": resources[i]}]
+                for unit in units:
+                    t0 = clock()
+                    ur = decode_unit(
+                        unit["unit_kind"], unit["payload"], unit["page"],
+                        unit["resources"], config_local, fonts_cache,
+                    )
+                    ms.append((clock() - t0) * 1000.0)
+                    for _, k, t, r in ur.spans:
+                        f_kind.append(k)
+                        f_text.append(t)
+                        f_ref.append(r)
+                    offsets.append(len(f_kind))
+                    o_doc.append(doc_id)
+                    o_page.append(unit["page"])
+                    cells.append(ur.cells_emitted)
+                    failed.append(ur.failed)
+                    errors.append(ur.error or None)
+                    timings = ur.timings or {}
+                    for key, col in zip(STAGE_KEYS, stage_ms):
+                        col.append(timings.get(key))
+            struct_arr = pa.StructArray.from_arrays(
+                [pa.array(f_kind, pa.string()), pa.array(f_text, pa.string()),
+                 pa.array(f_ref, pa.string())],
+                fields=span_fields,
+            )
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(o_doc, pa.string()), pa.array(o_page, pa.int32()),
+                 pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), struct_arr),
+                 pa.array(cells, pa.int32()), pa.array(failed, pa.bool_()),
+                 pa.array(errors, pa.string()), pa.array(ms, pa.float64())]
+                + [pa.array(col, pa.float64()) for col in stage_ms],
+                schema=out_schema,
             )
 
-    return units_df.mapInPandas(decode_batches, schema=DECODED_DDL)
+    return routed_df.mapInArrow(run, schema=DECODED_DDL)
+
+
+# Former names of the decode pass, kept as aliases because the benchmark's
+# traced run (perfbench/trace_run.py) imports them to time the decode layer.
+decode_routed = decode_slim = decode
 
 
 def extract_cells(docs_df: DataFrame, config: DecodeConfig | None = None,
@@ -118,7 +212,12 @@ def extract_cells(docs_df: DataFrame, config: DecodeConfig | None = None,
 
     spark = docs_df.sparkSession
     n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    units = explode_units(docs_df).filter(F.col("unit_kind") == "pdf").repartition(n, "doc_id", "page")
+    units = (
+        route_units(docs_df, SPLIT_ALL)
+        .filter(F.col("unit_kind") == "pdf")
+        .select("doc_id", "page", "payload", "resources")
+        .repartition(n, "doc_id", "page")
+    )
     cfg_dict = (config or DecodeConfig()).__dict__.copy()
 
     def decode_cells(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -211,171 +310,18 @@ def extract_doc_meta(docs_df: DataFrame) -> DataFrame:
     return docs_df.mapInPandas(run, schema=DOC_META_DDL)
 
 
-def route_units(docs_df: DataFrame, heavy_span_threshold: int) -> DataFrame:
-    """Single-scan skew routing (cheap string work, no decode): light docs
-    pass through whole (one row, spans attached) so their decode stays fused;
-    docs over ``heavy_span_threshold`` input spans are split to page units so
-    one mega-doc never serializes a task (SURVEY.md §7.4 #4)."""
+def int32_offsets(bounds):
+    """List offsets as the int32 array Spark's Arrow list type requires;
+    raises instead of wrapping when a batch's span total exceeds int32."""
+    import pyarrow as pa
 
-    def route(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                # Arrow delivers array<struct> elements as plain dicts with
-                # exactly the doc_spans schema keys — pass them through;
-                # routing itself needs only the span count. A NULL spans
-                # array is an empty doc, not a crash (round-4 review).
-                if spans is None:
-                    spans = []
-                if len(spans) <= heavy_span_threshold:
-                    rows.append(
-                        {"doc_id": doc_id, "page": 0, "unit_kind": "__doc__",
-                         "payload": None, "resources": None, "doc_spans": list(spans)}
-                    )
-                else:
-                    for unit in doc_to_units(doc_id, spans):
-                        unit = dict(unit)
-                        unit["doc_spans"] = None
-                        rows.append(unit)
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "page", "unit_kind", "payload", "resources", "doc_spans"]
-            )
-
-    return docs_df.mapInPandas(route, schema=ROUTED_DDL)
-
-
-def decode_routed(routed_df: DataFrame, config: DecodeConfig | None = None) -> DataFrame:
-    """Decode the routed union: '__doc__' rows run the fused per-doc loop,
-    unit rows decode individually. One output row per decoded unit."""
-    cfg_dict = (config or DecodeConfig()).__dict__.copy()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        config_local = DecodeConfig(**cfg_dict)
-        fonts_cache: dict = {}
-        for pdf in batches:
-            rows = []
-            for doc_id, page, unit_kind, payload, resources, doc_spans in zip(
-                pdf["doc_id"], pdf["page"], pdf["unit_kind"], pdf["payload"],
-                pdf["resources"], pdf["doc_spans"],
-            ):
-                if unit_kind == "__doc__":
-                    # in-process hand-off: resources stay dicts (no JSON
-                    # dumps+loads per page — decode_unit accepts both forms)
-                    units = doc_to_units(doc_id, doc_spans, serialize=False)
-                else:
-                    units = [{"unit_kind": unit_kind, "payload": payload,
-                              "page": int(page), "resources": resources}]
-                for unit in units:
-                    t0 = time.perf_counter()
-                    ur = decode_unit(
-                        unit["unit_kind"], unit["payload"], unit["page"],
-                        unit["resources"], config_local, fonts_cache,
-                    )
-                    ms = (time.perf_counter() - t0) * 1000.0
-                    rows.append(
-                        (doc_id, unit["page"],
-                         [{"kind": k, "text": t, "media_ref": r} for _, k, t, r in ur.spans],
-                         ur.cells_emitted, ur.failed, ms, ur.timings or {})
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "page", "unit_spans", "cells", "failed",
-                               "decode_ms", "stage_ms"]
-            )
-
-    return routed_df.mapInPandas(run, schema=DECODED_DDL)
-
-
-SLIM_DECODED_DDL = (
-    "doc_id string, page int, "
-    "unit_spans array<struct<kind:string,text:string,media_ref:string>>"
-)
-
-
-def decode_slim(in_df: DataFrame, config: DecodeConfig | None = None) -> DataFrame:
-    """Metrics-free decode pass over routed rows OR plain unit rows,
-    Arrow-native (``mapInArrow``). Emits ONLY (doc_id, page, unit_spans).
-
-    The full-DDL passes (``decode_units``/``decode_routed``) build and ship
-    cells/failed/decode_ms/stage_ms — including a ``map<string,double>`` —
-    through the Python->JVM boundary for every unit, which the metrics-free
-    callers (``extract_spans(with_metrics=False)``, i.e. the flagship bench
-    path) project away immediately after: Spark cannot push that pruning
-    into the Python worker, so the rows were built, converted and serialized
-    for nothing. This variant also skips the per-row pandas->Arrow struct
-    conversion entirely: output spans are accumulated as flat kind/text/ref
-    columns + offsets and assembled with ``pa.StructArray``/
-    ``pa.ListArray.from_arrays`` — one vectorized C construction per batch
-    (guide §4.2's re-slice-don't-rebuild property). Span content and unit
-    keys are byte-identical to the full pass; failed units still contribute
-    an empty span array (UnitResult.spans == [] on failure)."""
-    cfg_dict = (config or DecodeConfig()).__dict__.copy()
-
-    def run(batches):
-        import pyarrow as pa
-
-        span_t = pa.struct(
-            [("kind", pa.string()), ("text", pa.string()), ("media_ref", pa.string())]
+    if int(bounds[-1]) >= 2**31:
+        raise ValueError(
+            f"reassemble: an Arrow batch of {len(bounds) - 1} docs holds "
+            f"{int(bounds[-1])} spans, over the int32 list-offset limit; "
+            "lower spark.sql.execution.arrow.maxRecordsPerBatch"
         )
-        out_schema = pa.schema(
-            [("doc_id", pa.string()), ("page", pa.int32()),
-             ("unit_spans", pa.list_(span_t))]
-        )
-        span_fields = [span_t.field(i) for i in range(3)]
-        config_local = DecodeConfig(**cfg_dict)
-        fonts_cache: dict = {}
-        for batch in batches:
-            names = batch.schema.names
-            doc_ids = batch.column("doc_id").to_pylist()
-            pages = batch.column("page").to_pylist() if "page" in names else None
-            kinds_in = batch.column("unit_kind").to_pylist()
-            payloads = batch.column("payload").to_pylist()
-            resources = batch.column("resources").to_pylist()
-            doc_spans = (
-                batch.column("doc_spans").to_pylist() if "doc_spans" in names
-                else [None] * len(doc_ids)
-            )
-            o_doc: list = []
-            o_page: list = []
-            offsets = [0]
-            f_kind: list = []
-            f_text: list = []
-            f_ref: list = []
-            for i, doc_id in enumerate(doc_ids):
-                unit_kind = kinds_in[i]
-                if unit_kind == "__doc__":
-                    # fused light doc: in-process hand-off, resources stay
-                    # dicts (no JSON dumps+loads per page)
-                    units = doc_to_units(doc_id, doc_spans[i], serialize=False)
-                else:
-                    units = [{"unit_kind": unit_kind, "payload": payloads[i],
-                              "page": int(pages[i]), "resources": resources[i]}]
-                for unit in units:
-                    ur = decode_unit(
-                        unit["unit_kind"], unit["payload"], unit["page"],
-                        unit["resources"], config_local, fonts_cache,
-                    )
-                    for _, k, t, r in ur.spans:
-                        f_kind.append(k)
-                        f_text.append(t)
-                        f_ref.append(r)
-                    offsets.append(len(f_kind))
-                    o_doc.append(doc_id)
-                    o_page.append(unit["page"])
-            struct_arr = pa.StructArray.from_arrays(
-                [pa.array(f_kind, pa.string()), pa.array(f_text, pa.string()),
-                 pa.array(f_ref, pa.string())],
-                fields=span_fields,
-            )
-            spans_arr = pa.ListArray.from_arrays(
-                pa.array(offsets, pa.int32()), struct_arr
-            )
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(o_doc, pa.string()), pa.array(o_page, pa.int32()),
-                 spans_arr],
-                schema=out_schema,
-            )
-
-    return in_df.mapInArrow(run, schema=SLIM_DECODED_DDL)
+    return pa.array(bounds, pa.int32())
 
 
 def reassemble(decoded_df: DataFrame) -> DataFrame:
@@ -385,16 +331,13 @@ def reassemble(decoded_df: DataFrame) -> DataFrame:
     the output).
 
     The grouping + page-sort stay JVM-side (one exchange +
-    ObjectHashAggregate, exactly as before); the flatten + offset stamping
-    moved from higher-order ``transform`` expressions — which Spark
-    interprets per element, ~9M lambda evaluations at the sf1.0 bench — to
-    one vectorized Arrow pass: flatten is an offsets-array operation on the
-    existing buffers and the dense offsets are one arange minus a repeat
-    (guide §4.2's re-slice-don't-rebuild property). Span order and offset
-    values are identical by construction: pages arrive sorted by the page
-    key from sort_array, flatten preserves order, and the stamped offset is
-    the span's position in that order — the same value the old
-    transform's index lambda produced."""
+    ObjectHashAggregate); the flatten + offset stamping is one vectorized
+    Arrow pass: flatten is an offsets-array operation on the existing
+    buffers and the dense offsets are one arange minus a repeat (guide
+    §4.2's re-slice-don't-rebuild property). Span order and offset values
+    are deterministic by construction: pages arrive sorted by the page key
+    from sort_array, flatten preserves order, and the stamped offset is the
+    span's position in that order."""
     pages = F.sort_array(F.collect_list(F.struct("page", "unit_spans")))
     grouped = decoded_df.groupBy("doc_id").agg(pages.alias("pages"))
 
@@ -435,6 +378,7 @@ def reassemble(decoded_df: DataFrame) -> DataFrame:
             span_cum = _np.zeros(len(spans_per_unit) + 1, dtype=_np.int64)
             _np.cumsum(spans_per_unit, out=span_cum[1:])
             doc_bounds = span_cum[unit_bounds]  # span start per doc boundary
+            list_offsets = int32_offsets(doc_bounds)
             spans_per_doc = doc_bounds[1:] - doc_bounds[:-1]
             total = int(doc_bounds[-1])
             # dense per-doc offsets: global position minus the doc's start
@@ -450,9 +394,7 @@ def reassemble(decoded_df: DataFrame) -> DataFrame:
                 ],
                 fields=span_fields,
             )
-            spans_arr = pa.ListArray.from_arrays(
-                pa.array(doc_bounds, pa.int32()), stamped
-            )
+            spans_arr = pa.ListArray.from_arrays(list_offsets, stamped)
             yield pa.RecordBatch.from_arrays([doc, spans_arr], schema=out_schema)
 
     return grouped.mapInArrow(
@@ -464,28 +406,60 @@ def reassemble(decoded_df: DataFrame) -> DataFrame:
     )
 
 
+def accounting_aggs() -> list[Column]:
+    """Aggregates of the decode's accounting columns under the metrics-table
+    names (FIXTURES.md §3). Plain sums over any set of decoded rows: a
+    partition (``metrics_table``) or a checkpoint bucket's Observation.
+    Empty input yields zero counts and null doc-id bounds."""
+    return [
+        F.min("doc_id").alias("doc_id_min"),
+        F.max("doc_id").alias("doc_id_max"),
+        F.count(F.lit(1)).alias("pages_parsed"),
+        F.coalesce(F.sum("cells"), F.lit(0)).cast("long").alias("cells_emitted"),
+        F.coalesce(F.sum(F.col("failed").cast("long")), F.lit(0)).alias("decode_failures"),
+        *[
+            F.round(F.coalesce(F.sum(f"{k}_ms"), F.lit(0.0)), 3).alias(f"{k}_ms_total")
+            for k in ("decode",) + STAGE_KEYS
+        ],
+    ]
+
+
 def metrics_table(decoded_df: DataFrame, lineage: str = "") -> DataFrame:
     """Per-partition extraction metrics (FIXTURES.md §3) — the analog of the
     reference's per-page timings/metrics maps (utils/pdf_timings.h:32-99)."""
-    with_pid = decoded_df.withColumn("partition_id", F.spark_partition_id())
     return (
-        with_pid.groupBy("partition_id")
-        .agg(
-            F.min("doc_id").alias("doc_id_min"),
-            F.max("doc_id").alias("doc_id_max"),
-            F.count("*").cast("long").alias("pages_parsed"),
-            F.sum("cells").cast("long").alias("cells_emitted"),
-            F.sum(F.when(F.col("failed"), 1).otherwise(0)).cast("long").alias("decode_failures"),
-            F.round(F.sum("decode_ms"), 3).alias("decode_ms_total"),
-            *[
-                F.round(
-                    F.sum(F.coalesce(F.element_at("stage_ms", F.lit(k)), F.lit(0.0))), 3
-                ).alias(f"{k}_ms_total")
-                for k in STAGE_KEYS
-            ],
-        )
+        decoded_df.groupBy(F.spark_partition_id().alias("partition_id"))
+        .agg(*accounting_aggs())
         .withColumn("lineage", F.lit(lineage))
     )
+
+
+def decoded_units(
+    docs_df: DataFrame,
+    config: DecodeConfig | None = None,
+    num_partitions: int | None = None,
+    heavy_span_threshold: int = 24,
+    page_numbers: list[int] | None = None,
+) -> DataFrame:
+    """docs table -> routed, shuffled and decoded units (``DECODED_DDL``),
+    the input of ``reassemble`` and of the accounting aggregates."""
+    spark = docs_df.sparkSession
+    n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    if page_numbers is None:
+        routed = route_units(docs_df, heavy_span_threshold)
+    else:
+        # unit subset: decode only the nth decodable units per doc (the pdf
+        # page number for pdf docs); filtering happens BEFORE any decode
+        from pyspark.sql import Window
+
+        w = Window.partitionBy("doc_id").orderBy("page")
+        routed = (
+            route_units(docs_df, SPLIT_ALL)
+            .withColumn("unit_no", F.row_number().over(w) - 1)
+            .filter(F.col("unit_no").isin([int(p) for p in page_numbers]))
+            .drop("unit_no")
+        )
+    return decode(routed.repartition(n, "doc_id", "page"), config)
 
 
 def extract_spans(
@@ -511,34 +485,15 @@ def extract_spans(
     doubles as the parallelism widener (small parquet scans coalesce to a
     few partitions under maxPartitionBytes, which would serialize the
     compute-heavy decode). ``num_partitions`` sizes it (default: session
-    ``spark.sql.shuffle.partitions``)."""
-    spark = docs_df.sparkSession
-    n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if page_numbers is not None:
-        # unit subset: decode only the nth decodable units per doc (the pdf
-        # page number for pdf docs); filtering happens BEFORE any decode
-        from pyspark.sql import Window
+    ``spark.sql.shuffle.partitions``).
 
-        w = Window.partitionBy("doc_id").orderBy("page")
-        units = (
-            explode_units(docs_df)
-            .withColumn("unit_no", F.row_number().over(w) - 1)
-            .filter(F.col("unit_no").isin([int(p) for p in page_numbers]))
-            .drop("unit_no")
-            .repartition(n, "doc_id", "page")
-        )
-        decoded = decode_units(units, config) if with_metrics else decode_slim(units, config)
-    else:
-        routed = route_units(docs_df, heavy_span_threshold).repartition(n, "doc_id", "page")
-        decoded = decode_routed(routed, config) if with_metrics else decode_slim(routed, config)
-    if not with_metrics:
-        return reassemble(decoded)
-    decoded = decoded.persist()
+    ``with_metrics=True`` also returns ``metrics_table`` over the same
+    decoded frame. Nothing is cached, so each frame decodes when consumed;
+    for one decode, observe ``decoded_units`` instead (checkpoint.py)."""
+    decoded = decoded_units(
+        docs_df, config, num_partitions, heavy_span_threshold, page_numbers
+    )
     spans = reassemble(decoded)
-    metrics = metrics_table(decoded, lineage)
-    # spans and metrics both scan the persisted decode output; the caller
-    # should unpersist this handle once both are materialized (checkpoint.py
-    # does) — otherwise cached partitions accumulate across buckets.
-    spans.persisted_source = decoded
-    metrics.persisted_source = decoded
-    return spans, metrics
+    if not with_metrics:
+        return spans
+    return spans, metrics_table(decoded, lineage)

@@ -12,6 +12,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory(ram_bytes: int | None = None) -> str:
+    """Default ``spark.driver.memory``: ``SPARK_DRIVER_MEM`` when set, else
+    half of host RAM clamped to 1-48 GiB. In local mode the driver JVM is
+    also the executor; the other half stays with the Python workers that
+    run the decode kernels, and with the OS."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    if ram_bytes is None:
+        ram_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    mib = ram_bytes // 2 // (1 << 20)
+    return f"{max(1024, min(48 * 1024, mib))}m"
+
+
 def get_spark(
     app_name: str = "docling_parse_spark",
     master: str | None = None,
@@ -43,7 +57,7 @@ def get_spark(
         # (backpressure; src/pybind/docling_threaded_base.h:109-112).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -147,3 +147,89 @@ def test_pdf_dir_job_resume_survives_staging(spark, tmp_path):
     job.main(["--input-pdf-dir", str(pdf_dir), "--out", out,
               "--buckets", "3", "--partitions", "2", "--resume"])
     assert spark.read.parquet(f"{out}/spans").count() == 6
+
+
+def clear_cached_state(spark):
+    spark.catalog.clearCache()
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    for rid in list(rdds.keySet().toArray()):
+        rdds.get(rid).unpersist(True)
+
+
+def assert_no_cached_state(spark, docs_df):
+    """Nothing persisted or cached, so a fresh decode plans from its
+    source rather than from a cached relation (the ROADMAP cache leak: a
+    later independent query was answered from a leftover persist)."""
+    from docling_parse_spark.extract import decoded_units
+
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    plan = decoded_units(docs_df)._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" not in plan
+
+
+def test_extract_with_metrics_leaves_no_cache(spark, docs_df):
+    from docling_parse_spark.extract import extract_spans
+
+    clear_cached_state(spark)
+    spans, metrics = extract_spans(docs_df, num_partitions=4, with_metrics=True)
+    assert spans.count() == 30
+    assert sum(r["pages_parsed"] for r in metrics.collect()) > 0
+    assert_no_cached_state(spark, docs_df)
+
+
+def test_checkpoint_leaves_no_cache(spark, docs_df, tmp_path):
+    clear_cached_state(spark)
+    run_with_checkpoint(docs_df, str(tmp_path / "ckpt"), buckets=2, num_partitions=4)
+    assert_no_cached_state(spark, docs_df)
+
+
+def test_checkpoint_accounting_with_empty_buckets(spark, tmp_path):
+    """More buckets than docs (so some buckets are empty) plus one
+    corrupt-font doc: every bucket commits, and the committed counts equal
+    the sequential unit decode's."""
+    from docling_parse_spark.document import decode_unit, doc_to_units
+    from docling_parse_spark.extract import decoded_units
+
+    corpus = generate_corpus(5, seed=3)
+    corpus.append({
+        "doc_id": "doc-corrupt",
+        "spans": [
+            {"kind": "pdf_font", "text": '{"font_key": "F1", "widths": "NOT-A-LIST"}',
+             "media_ref": None, "offset": 0},
+            {"kind": "pdf_ops", "text": "BT /F1 10 Tf (x) Tj ET", "media_ref": None, "offset": 1},
+        ],
+    })
+    units = [u for d in corpus for u in doc_to_units(d["doc_id"], d["spans"])]
+    cells = sum(
+        decode_unit(u["unit_kind"], u["payload"], u["page"], u["resources"]).cells_emitted
+        for u in units
+    )
+    docs = spark.createDataFrame(corpus_to_spark_rows(corpus), schema=SPANS_TABLE_SCHEMA)
+    out = str(tmp_path / "acct")
+    buckets = 16
+    run_with_checkpoint(docs, out, buckets=buckets, run_id="acct", num_partitions=4)
+
+    done = committed_buckets(out)
+    assert sorted(done) == list(range(buckets))
+    assert sum(r["pages_parsed"] for r in done.values()) == len(units)
+    assert sum(r["cells_emitted"] for r in done.values()) == cells
+    assert sum(r["decode_failures"] for r in done.values()) == 1
+    assert sum(r["pages_parsed"] == 0 for r in done.values()) >= buckets - len(corpus)
+
+    m = spark.read.parquet(f"{out}/metrics")
+    rows = m.collect()
+    assert sorted(r["partition_id"] for r in rows) == list(range(buckets))
+    for r in rows:
+        rec = done[r["partition_id"]]
+        assert r["lineage"] == rec["lineage"] == f"acct/bucket={r['partition_id']}"
+        for c in ("pages_parsed", "cells_emitted", "decode_failures"):
+            assert r[c] == rec[c]
+        if rec["pages_parsed"] == 0:
+            assert r["doc_id_min"] is None and r["decode_ms_total"] == 0.0
+    assert spark.read.parquet(f"{out}/spans").count() == len(corpus)
+
+    # the failure reason leaves the worker on the corrupt unit's row
+    failed = decoded_units(docs, num_partitions=4).filter("failed").collect()
+    assert [r["doc_id"] for r in failed] == ["doc-corrupt"]
+    assert failed[0]["error"].startswith("font:")

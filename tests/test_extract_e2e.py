@@ -209,3 +209,15 @@ def test_doc_level_content_filters_reach_decode(spark):
         {"kind": "pdf_ops", "text": stream.decode("ascii"), "media_ref": None, "offset": 2},
     ]
     assert decode_document("d", spans) == decode_document("d", bare)
+
+
+def test_reassemble_refuses_int32_offset_overflow():
+    """A batch whose span total exceeds int32 raises instead of wrapping
+    the list offsets."""
+    import numpy as np
+
+    from docling_parse_spark.extract import int32_offsets
+
+    assert int32_offsets(np.array([0, 3, 2**31 - 1])).to_pylist() == [0, 3, 2**31 - 1]
+    with pytest.raises(ValueError, match="int32 list-offset limit"):
+        int32_offsets(np.array([0, 5, 2**31]))
