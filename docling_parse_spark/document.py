@@ -22,10 +22,12 @@ One document's input spans (north-rule shape, FIXTURES.md §1) are routed by
 This module is deliberately Spark-free: ``decode_unit`` processes ONE work
 unit (one PDF page or one HTML payload) and is called from both the
 sequential oracle (``decode_document``) and the distributed pipeline
-(``extract.py`` runs it inside ``mapInPandas`` after page-granularity
+(``extract.decode`` runs it inside ``mapInArrow`` after page-granularity
 splitting). Equality of the two paths is the core pytest invariant —
 the analog of the reference's threaded == sequential test
-(tests/test_threaded_parse.py:278).
+(tests/test_threaded_parse.py:278). A PDF unit's page decode is
+``decode_pdf_page``, the one reader of the unit resources format; the cells
+table (``extract.extract_cells``) and its fixture generator call it too.
 """
 
 from __future__ import annotations
@@ -39,6 +41,7 @@ from docling_parse_spark.web.boilerplate import extract_html_spans
 from docling_parse_spark.pdf.fonts import Font
 from docling_parse_spark.pdf.page import (
     DecodeConfig,
+    PageResult,
     build_fonts,
     decode_page,
     parse_page_descriptor,
@@ -129,45 +132,27 @@ def build_doc_resources(spans: list[dict]) -> dict:
     }
 
 
-def decode_unit(
-    unit_kind: str,
+def decode_pdf_page(
     payload: str | None,
-    page: int,
-    resources_json: str | None,
-    config: DecodeConfig | None = None,
+    resources: str | dict | None,
+    config: DecodeConfig,
     fonts_cache: dict | None = None,
-) -> UnitResult:
-    """Decode one work unit (a PDF page or an HTML document).
+) -> tuple[PageResult, dict, dict | None]:
+    """One PDF page unit -> ``(PageResult, resources, fonts)``: resources ->
+    cached fonts -> forms -> content ``/Filter`` -> page descriptor ->
+    ``decode_page``. The one reader of the unit resources format, shared by
+    ``decode_unit`` (spans; its annotation stage reuses the returned
+    resources dict and fonts) and ``extract.extract_cells`` (cells).
 
-    ``resources_json`` carries {fonts: [json...], page_desc: json|null,
-    media: {name: ref}} for PDF units — either as the serialized JSON string
-    (the Arrow-shipped unit rows) or as the already-parsed dict (the fused
-    in-process path from ``doc_to_units(serialize=False)``, which skips a
-    dumps+loads round trip per page; both forms decode identically because
-    the dict came from the same construction the JSON string serializes).
-    ``fonts_cache`` memoizes parsed Font objects per resources blob within a
-    batch (fonts repeat across a doc's pages — the reference loads them once
-    per document too)."""
-    config = config or DecodeConfig()
-    if unit_kind == "empty":
-        return UnitResult(spans=[])
-    if unit_kind == "html":
-        t0 = _clock()
-        try:
-            spans = extract_html_spans(payload or "")
-        except Exception as e:
-            return UnitResult(spans=[], failed=True, error=f"{type(e).__name__}: {e}")
-        return UnitResult(
-            spans=[(i, k, t, r) for i, (k, t, r) in enumerate(spans)],
-            timings={"html": (_clock() - t0) * 1000.0},
-        )
-
-    timings: dict[str, float] = {}
+    ``resources`` is the JSON string of an Arrow-shipped unit row or the
+    dict from ``doc_to_units(serialize=False)``; both decode identically.
+    A font-build or content-filter failure is a failed page (error prefixed
+    ``font:`` / ``filter:``) with no spans or cells, never a raise."""
     t0 = _clock()
-    if isinstance(resources_json, dict):
-        res = resources_json
+    if isinstance(resources, dict):
+        res = resources
     else:
-        res = json.loads(resources_json) if resources_json else {}
+        res = json.loads(resources) if resources else {}
     fonts: dict[str, Font]
     fonts_key = tuple(res.get("fonts", []))
     if fonts_cache is not None and fonts_key in fonts_cache:
@@ -176,7 +161,7 @@ def decode_unit(
         try:
             fonts = build_fonts(res.get("fonts", []))
         except Exception as e:
-            return UnitResult(spans=[], failed=True, error=f"font: {type(e).__name__}: {e}")
+            return PageResult(failed=True, error=f"font: {type(e).__name__}: {e}"), res, None
         if fonts_cache is not None:
             fonts_cache[fonts_key] = fonts
     page_desc = parse_page_descriptor(res.get("page_desc"))
@@ -198,11 +183,8 @@ def decode_unit(
             # filters/parms) = per-unit failure accounting, like any
             # corrupt stream (never a task-killing raise — same posture as
             # the font path above)
-            return UnitResult(
-                spans=[], failed=True, error=f"filter: {type(e).__name__}: {e}",
-                timings=timings,
-            )
-    timings["resources"] = (_clock() - t0) * 1000.0  # json + fonts + forms (cache-hit ≈ 0)
+            return PageResult(failed=True, error=f"filter: {type(e).__name__}: {e}"), res, fonts
+    resources_ms = (_clock() - t0) * 1000.0  # json + fonts + forms (cache-hit ≈ 0)
     pr = decode_page(
         content,
         fonts,
@@ -214,10 +196,43 @@ def decode_unit(
         page_desc=page_desc,
         config=config,
     )
-    timings.update(pr.timings)
+    pr.timings["resources"] = resources_ms
+    return pr, res, fonts
+
+
+def decode_unit(
+    unit_kind: str,
+    payload: str | None,
+    page: int,
+    resources_json: str | None,
+    config: DecodeConfig | None = None,
+    fonts_cache: dict | None = None,
+) -> UnitResult:
+    """Decode one work unit (a PDF page or an HTML document).
+
+    A PDF unit is ``decode_pdf_page`` (``resources_json`` as the JSON string
+    or the parsed dict) followed by the annotation stage.
+    ``fonts_cache`` memoizes parsed Font objects per resources blob within a
+    batch (fonts repeat across a doc's pages — the reference loads them once
+    per document too)."""
+    config = config or DecodeConfig()
+    if unit_kind == "empty":
+        return UnitResult(spans=[])
+    if unit_kind == "html":
+        t0 = _clock()
+        try:
+            spans = extract_html_spans(payload or "")
+        except Exception as e:
+            return UnitResult(spans=[], failed=True, error=f"{type(e).__name__}: {e}")
+        return UnitResult(
+            spans=[(i, k, t, r) for i, (k, t, r) in enumerate(spans)],
+            timings={"html": (_clock() - t0) * 1000.0},
+        )
+
+    pr, res, fonts = decode_pdf_page(payload, resources_json, config, fonts_cache)
+    timings = pr.timings
     if pr.failed:
-        return UnitResult(spans=[], cells_emitted=0, failed=True, error=pr.error,
-                          timings=timings)
+        return UnitResult(spans=[], failed=True, error=pr.error, timings=timings)
     out = list(pr.spans)
     # stage 4: annotations decode AFTER content (reference: decode_page runs
     # decode_annots after decode_contents, page.h:803-909)

@@ -23,6 +23,10 @@ UDF → groupBy/sort_array → sink):
    partition arrival order — then one Arrow pass flattens and stamps dense
    offsets.
 
+The cells table (``extract_cells``) reuses the router (``SPLIT_ALL``) and
+shuffle, then decodes each PDF page unit with ``document.decode_pdf_page``,
+the page decode of ``decode_unit``: one ``CELLS_DDL`` row per output cell.
+
 Metrics (pages_parsed / cells_emitted / decode_failures / stage times) are a
 plain aggregate (``accounting_aggs``) over the accounting columns of the same
 decoded rows: per partition in ``metrics_table``, or as an ``Observation`` on
@@ -37,7 +41,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
-from docling_parse_spark.document import decode_unit, doc_to_units
+from docling_parse_spark.document import decode_pdf_page, decode_unit, doc_to_units
 from docling_parse_spark.pdf.page import DecodeConfig
 
 # per-stage timing keys, one ``<key>_ms`` column each (reference pdf_timings
@@ -208,7 +212,6 @@ def extract_cells(docs_df: DataFrame, config: DecodeConfig | None = None,
     positioned output cell with axis bbox + font + provenance — the substrate
     for the geometry operators (operators/geometry.py)."""
     from docling_parse_spark.operators.geometry import CELLS_DDL
-    from docling_parse_spark.pdf.page import build_fonts, decode_page, parse_page_descriptor
 
     spark = docs_df.sparkSession
     n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -221,10 +224,6 @@ def extract_cells(docs_df: DataFrame, config: DecodeConfig | None = None,
     cfg_dict = (config or DecodeConfig()).__dict__.copy()
 
     def decode_cells(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import json as _json
-
-        from docling_parse_spark.document import build_forms
-
         cfg = DecodeConfig(**cfg_dict)
         fonts_cache: dict = {}
         for pdf in batches:
@@ -232,33 +231,9 @@ def extract_cells(docs_df: DataFrame, config: DecodeConfig | None = None,
             for doc_id, page, payload, resources in zip(
                 pdf["doc_id"], pdf["page"], pdf["payload"], pdf["resources"]
             ):
-                # same failure posture as decode_unit (round-4 review: a
-                # malformed pdf_font blob raised out of build_fonts here
-                # and killed the task): a failed page yields zero cells,
-                # matching decode_page's own internal-failure behavior
-                try:
-                    res = _json.loads(resources) if resources else {}
-                    key = tuple(res.get("fonts", []))
-                    if key not in fonts_cache:
-                        fonts_cache[key] = build_fonts(res.get("fonts", []))
-                    content = (payload or "").encode("utf-8", "surrogateescape")
-                    if res.get("content_filters"):
-                        from docling_parse_spark.pdf.filters import apply_filters
-
-                        content = apply_filters(
-                            content, res["content_filters"], res.get("content_parms")
-                        )
-                    pr = decode_page(
-                        content,
-                        fonts_cache[key],
-                        images=res.get("media") or {},
-                        forms=build_forms(res.get("forms"), fonts_cache),
-                        colorspaces=res.get("colorspaces") or {},
-                        page_desc=parse_page_descriptor(res.get("page_desc")),
-                        config=cfg,
-                    )
-                except Exception:
-                    continue
+                # the same page decode as the spans path; a failed page (bad
+                # font blob, bad transport, corrupt stream) has no cells
+                pr, _, _ = decode_pdf_page(payload, resources, cfg, fonts_cache)
                 for i, c in enumerate(pr.cells):
                     rows.append(
                         (doc_id, int(page), i, c.text, c.x0, c.y0, c.x1, c.y1,

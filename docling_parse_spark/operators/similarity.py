@@ -160,12 +160,12 @@ def lsh_topk(
     # used to produce b candidate rows, each carrying both vectors into the
     # scoring stage — at 32 planes/16 bands (2-bit keys) nearly every pair
     # collides in ~4 bands, so the Python scoring boundary moved ~4x the
-    # bytes and computed ~4x the cosines it needed, and the window then
-    # dropped the copies via lag(). Keeping only the collision whose band
-    # has no earlier matching band yields exactly ONE row per candidate
-    # pair (same pair set — the first matching band always survives), stays
-    # a broadcast HASH join on (band, key), and the slice/zip_with check
-    # costs <= bands interpreted steps vs ~3*dim for a wasted cosine.
+    # bytes and computed ~4x the cosines it needed. Keeping only the
+    # collision whose band has no earlier matching band yields exactly ONE
+    # row per candidate pair (same pair set — the first matching band always
+    # survives), stays a broadcast HASH join on (band, key), and the
+    # slice/zip_with check costs <= bands interpreted steps vs ~3*dim for a
+    # wasted cosine.
     no_earlier_match = ~F.exists(
         F.zip_with(
             F.slice(F.col("ckeys"), F.lit(1), F.col("cband")),
@@ -181,18 +181,13 @@ def lsh_topk(
         & (F.col("neighbor_id") != F.col("query_id"))
         & no_earlier_match,
     ).select("query_id", "neighbor_id", "qv", "cv")
-    # candidates are now unique pairs; score, then rank. The lag() dedup is
-    # kept (it is a no-op on unique pairs and rides the ranking window's
-    # exchange) so the output contract is visibly unchanged.
+    # no_earlier_match leaves one row per candidate pair: score, then rank
     scored = cand.withColumn("cos", F.round(cosine_arrow(F.col("qv"), F.col("cv")), 6)).select(
         "query_id", "neighbor_id", "cos"
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    deduped = scored.withColumn("_prev", F.lag("neighbor_id").over(w)).filter(
-        F.col("_prev").isNull() | (F.col("_prev") != F.col("neighbor_id"))
-    )
     return (
-        deduped.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cos", "rank")
     )

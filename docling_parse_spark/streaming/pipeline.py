@@ -5,10 +5,6 @@ batch pipeline (same kernels, same reassembly) — streaming and batch stay
 semantically identical by construction, and Structured Streaming's
 checkpoint/WAL provides the at-least-once resume that ``checkpoint.py``
 provides for pure batch runs.
-
-``windowed_extraction_metrics`` demonstrates the watermark + tumbling-window
-aggregation path over an event-time column (late rows beyond the watermark
-are dropped deterministically).
 """
 
 from __future__ import annotations
@@ -96,28 +92,6 @@ def curate_stream(docs: DataFrame, min_tokens: int = 5, min_quality: float = 0.6
     from docling_parse_spark.pipeline import redact_score_filter
 
     return redact_score_filter(docs, min_tokens, min_quality)
-
-
-def windowed_extraction_metrics(
-    events: DataFrame,
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Watermarked tumbling-window counts over a streaming event-time frame —
-    the pattern for continuous extraction-metric rollups."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("w"), F.col("event_type"))
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
 
 
 def stream_ingest_pdf_files(

@@ -44,6 +44,39 @@ def cells_df(spark):
     return extract_cells(docs, num_partitions=4).cache()
 
 
+@pytest.mark.parametrize("encrypted", [False, True])
+def test_extract_cells_matches_fixture(spark, encrypted):
+    """The cells table over the fixture corpus equals fixtures/mini_cells.parquet
+    row for row, at two partition counts; the encrypted twins decode to the
+    same cells as the plain ones the fixture pins."""
+    import os
+
+    import pandas as pd
+
+    from docling_parse_spark.corpus import (
+        corpus_to_spark_rows,
+        generate_corpus,
+        generate_pdf_file_docs,
+    )
+    from docling_parse_spark.extract import extract_cells
+    from docling_parse_spark.schemas import SPANS_TABLE_SCHEMA
+
+    cols = ["doc_id", "page", "cell_idx", "text", "x0", "y0", "x1", "y1", "rendering_mode"]
+    key = ["doc_id", "page", "cell_idx"]
+    fixture = os.path.join(os.path.dirname(os.path.dirname(__file__)), "fixtures", "mini_cells.parquet")
+    expected = pd.read_parquet(fixture)[cols].sort_values(key).reset_index(drop=True)
+    docs = spark.createDataFrame(
+        corpus_to_spark_rows(generate_corpus(60, seed=42) + generate_pdf_file_docs(encrypted=encrypted)),
+        schema=SPANS_TABLE_SCHEMA,
+    )
+    for n in (3, 8):
+        got = (
+            extract_cells(docs, num_partitions=n).select(*cols).toPandas()
+            .sort_values(key).reset_index(drop=True)
+        )
+        pd.testing.assert_frame_equal(got, expected, check_exact=True)
+
+
 def test_extract_cells_schema_and_content(cells_df):
     rows = cells_df.collect()
     assert len(rows) > 0

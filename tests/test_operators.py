@@ -67,11 +67,12 @@ def test_cosine_and_brute_force_topk(spark):
 
 def test_lsh_topk_recall(spark):
     """LSH neighbors ⊆ brute-force candidates; the true top-1 is found for
-    most queries on clustered data."""
+    most queries on clustered data; each (query, neighbor) pair is ranked
+    once even when it collides in several bands."""
     import math
     import random
 
-    from docling_parse_spark.operators.similarity import brute_force_topk, lsh_topk
+    from docling_parse_spark.operators.similarity import _hyperplanes, brute_force_topk, lsh_topk
 
     rng = random.Random(7)
     rows = []
@@ -84,6 +85,23 @@ def test_lsh_topk_recall(spark):
     approx = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in lsh_topk(emb, queries, k=1, n_planes=8, bands=4, dim=3).collect()}
     hits = sum(1 for k in exact if approx.get(k) == exact[k])
     assert hits >= math.ceil(len(exact) * 0.5)
+    # 2-bit band keys: same-cluster pairs collide in several bands, yet the
+    # ranking sees each candidate pair once
+    planes = _hyperplanes(3, 8)
+
+    def band_keys(v):
+        bits = [sum(p * x for p, x in zip(plane, v)) > 0 for plane in planes]
+        return [tuple(bits[2 * b:2 * b + 2]) for b in range(4)]
+
+    keys = {i: band_keys(v) for i, v in rows}
+    assert any(
+        sum(a == b for a, b in zip(keys[q], keys[j])) >= 2
+        for q in range(6) for j in keys if j != q
+    )
+    top5 = lsh_topk(emb, queries, k=5, n_planes=8, bands=4, dim=3).collect()
+    pairs = [(r["query_id"], r["neighbor_id"]) for r in top5]
+    assert len(pairs) == len(set(pairs)) == 5 * 6
+    assert sorted(r["rank"] for r in top5 if r["query_id"] == 0) == [1, 2, 3, 4, 5]
 
 
 def test_winnowing_fingerprint_robust_to_small_edit(spark):

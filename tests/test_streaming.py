@@ -1,11 +1,11 @@
-"""Structured Streaming tests: streaming == batch, watermark windows run."""
+"""Structured Streaming tests: streaming == batch, idempotent replay, streamable curation."""
 
 import pytest
 
 from docling_parse_spark.corpus import corpus_to_spark_rows, generate_corpus
 from docling_parse_spark.document import decode_document
 from docling_parse_spark.schemas import SPANS_TABLE_SCHEMA
-from docling_parse_spark.streaming.pipeline import stream_extract, windowed_extraction_metrics
+from docling_parse_spark.streaming.pipeline import stream_extract
 
 
 def test_stream_extract_matches_oracle(spark, tmp_path):
@@ -90,26 +90,6 @@ def test_stream_sink_coexists_with_legacy_flat_output(spark, tmp_path):
     stream_extract(spark, in_dir, out_dir, ckpt, num_partitions=2).awaitTermination(120)
     out = spark.read.parquet(out_dir)
     assert out.count() == 8 and out.columns == ["doc_id", "spans"]
-
-
-def test_windowed_metrics_batch_semantics(spark):
-    from pyspark.sql import functions as F
-
-    ev = spark.createDataFrame(
-        [
-            ("2026-01-01 00:01:00", "decode", 1.0),
-            ("2026-01-01 00:04:00", "decode", 2.0),
-            ("2026-01-01 00:12:00", "decode", 5.0),
-            ("2026-01-01 00:13:00", "fail", 1.0),
-        ],
-        "ts string, event_type string, value double",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    out = windowed_extraction_metrics(ev).orderBy("window_start", "event_type").collect()
-    assert [(r["event_type"], r["n_events"], r["sum_value"]) for r in out] == [
-        ("decode", 2, 3.0),
-        ("decode", 1, 5.0),
-        ("fail", 1, 1.0),
-    ]
 
 
 def test_curate_stream_runs_on_streaming_frame(spark, tmp_path):

@@ -9,7 +9,7 @@ re-derives the relational aggregations (counts, stats, survivors, pixel
 statistics) from these tables, so a distributed-plumbing bug shows up as a
 driver hash mismatch.
 
-Usage: python tools/make_fixtures.py  (writes /root/repo/fixtures/)
+Usage: python tools/make_fixtures.py  (writes fixtures/ at the repo root)
 """
 
 from __future__ import annotations
@@ -36,12 +36,13 @@ def _write(df: pd.DataFrame, name: str, int32_cols: tuple[str, ...] = ()) -> Non
 
 def mini_cells_and_components() -> None:
     """Sequential twin of extract.extract_cells + connected components
-    (operators/geometry.merge_overlapping_boxes) over the 60-doc mini corpus."""
+    (operators/geometry.merge_overlapping_boxes) over the 60-doc mini corpus.
+    Each page decodes through document.decode_pdf_page, the same call the
+    cells table makes per unit."""
     from docling_parse_spark.corpus import generate_corpus, generate_pdf_file_docs
-    from docling_parse_spark.document import build_forms, doc_to_units
+    from docling_parse_spark.document import decode_pdf_page, doc_to_units
     from docling_parse_spark.operators.geometry import merge_overlapping_boxes
-    from docling_parse_spark.pdf.page import DecodeConfig, build_fonts, decode_page, parse_page_descriptor
-    import json
+    from docling_parse_spark.pdf.page import DecodeConfig
 
     cfg = DecodeConfig()
     cells_rows, comp_rows = [], []
@@ -49,25 +50,7 @@ def mini_cells_and_components() -> None:
         for unit in doc_to_units(d["doc_id"], d["spans"]):
             if unit["unit_kind"] != "pdf":
                 continue
-            res = json.loads(unit["resources"]) if unit["resources"] else {}
-            content = (unit["payload"] or "").encode("utf-8", "surrogateescape")
-            if res.get("content_filters"):
-                # declared transport (binary raw-file pages) — mirrors
-                # extract.extract_cells exactly
-                from docling_parse_spark.pdf.filters import apply_filters
-
-                content = apply_filters(
-                    content, res["content_filters"], res.get("content_parms")
-                )
-            pr = decode_page(
-                content,
-                build_fonts(res.get("fonts", [])),
-                images=res.get("media") or {},
-                forms=build_forms(res.get("forms")),
-                colorspaces=res.get("colorspaces") or {},
-                page_desc=parse_page_descriptor(res.get("page_desc")),
-                config=cfg,
-            )
+            pr, _, _ = decode_pdf_page(unit["payload"], unit["resources"], cfg)
             boxes = []
             for i, c in enumerate(pr.cells):
                 cells_rows.append((d["doc_id"], unit["page"], i, c.text,

@@ -1,7 +1,10 @@
 """Package the engine for ``spark-submit --py-files``.
 
 Produces ``dist/docling_parse_spark.zip`` containing the package (pure
-Python, no native deps). Ship with:
+Python, no native deps); the zip is a build output, not committed. Build and
+ship with:
+
+    python tools/make_pyfiles.py [out_dir]   # default out_dir: dist/
 
     spark-submit --master <cluster> \\
         --py-files dist/docling_parse_spark.zip \\
@@ -11,15 +14,16 @@ Python, no native deps). Ship with:
 from __future__ import annotations
 
 import os
+import sys
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> str:
-    dist = os.path.join(REPO, "dist")
-    os.makedirs(dist, exist_ok=True)
-    out = os.path.join(dist, "docling_parse_spark.zip")
+def main(out_dir: str = os.path.join(REPO, "dist")) -> str:
+    """Write ``docling_parse_spark.zip`` into ``out_dir`` and return its path."""
+    os.makedirs(out_dir, exist_ok=True)
+    out = os.path.join(out_dir, "docling_parse_spark.zip")
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
         pkg = os.path.join(REPO, "docling_parse_spark")
         for root, _dirs, files in os.walk(pkg):
@@ -36,4 +40,4 @@ def main() -> str:
 
 
 if __name__ == "__main__":
-    main()
+    main(*sys.argv[1:2])
