@@ -32,12 +32,6 @@ PII_PATTERNS: list[tuple[str, str]] = [
 ]
 
 
-def pii_count(c: Column, kind: str) -> Column:
-    """Number of matches of one PII category in ``c``."""
-    pattern = dict(PII_PATTERNS)[kind]
-    return F.size(F.regexp_extract_all(c, F.lit(pattern), 0))
-
-
 def redact_pii(c: Column) -> Column:
     """Replace every PII match with ``[KIND]`` placeholders, applying the
     categories in :data:`PII_PATTERNS` order (specific before generic).
@@ -75,12 +69,6 @@ def with_pii_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 # ------------------------------------------------------------ SQL twins
-
-def pii_count_sql(kind: str, col: str = "text") -> str:
-    """DuckDB twin of :func:`pii_count` (identical pattern string)."""
-    pattern = dict(PII_PATTERNS)[kind].replace("'", "''")
-    return f"len(regexp_extract_all({col}, '{pattern}'))"
-
 
 def pii_counts_sql(col: str = "text") -> list[tuple[str, str]]:
     """DuckDB twins of :func:`with_pii_counts`'s sequential counts:

@@ -8,10 +8,15 @@ aggregation, no driver-side loops) so they scale to 10^12 docs:
   -> banded bucket join -> candidate pairs (the MMDS ch.3 construction).
 * simhash: 64-bit sign-of-weighted-bit-sums, banded for Hamming<=k candidate
   pairs.
+
+  Both banded generators (and ``similarity.lsh_topk``) build only their own
+  per-band keys and scoring; the candidate join itself is :func:`band_pairs`,
+  one row per pair at its first matching band.
 * n-gram Jaccard: character shingles + self-join on shingle + count ratio —
   exact, SQL-expressible (has a DuckDB oracle twin).
 * embedding cosine: exact pairwise above a threshold (use LSH/IVF from
-  operators.similarity for the approximate scale path).
+  operators.similarity for the approximate scale path). :func:`cosine_arrow`
+  is the one Arrow cosine, for float and int8-quantized vectors alike.
 * duplicated-span coverage: SPAN-level (not doc-level) duplication — the
   ExactSubstr idea from Lee et al. 2022 ("Deduplicating Training Data
   Makes Language Models Better") re-expressed relationally: word n-grams
@@ -24,6 +29,7 @@ aggregation, no driver-side loops) so they scale to 10^12 docs:
 from __future__ import annotations
 
 import math
+import operator
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
@@ -118,6 +124,46 @@ def minhash_signatures(
     return sig.select("doc_id", F.array(*[f"h{i}" for i in range(num_perm)]).alias("sig"))
 
 
+def band_pairs(a: DataFrame, b: DataFrame, pair) -> DataFrame:
+    """Banded candidate join shared by minhash, simhash and LSH top-k.
+
+    ``a`` and ``b`` carry ``id`` plus ``keys`` (one key per band). Both
+    sides posexplode ``keys`` to ``(band, key)`` rows and equi-join on them
+    with ``pair(a.id, b.id)`` as the id predicate (``operator.lt`` for a
+    self-join, ``operator.ne`` for corpus × queries). The result holds the
+    ``a.*`` and ``b.*`` columns, one row per candidate pair.
+
+    First-matching-band dedup AT JOIN TIME: a pair colliding in m bands
+    would produce m join rows, and collapsing them afterwards costs a
+    dropDuplicates shuffle of the candidate set (or, for top-k, m copies of
+    both vectors in the scoring stage). Keeping only the collision whose
+    band has no earlier matching band yields exactly one row per pair
+    inside the band join's own exchange; the pair set is unchanged (the
+    first matching band always survives), and the slice/zip_with check
+    costs <= bands interpreted steps. Per-id payloads are deterministic, so
+    the surviving row equals any other band's row for the same pair.
+
+    Identical docs collide in every band, so a bucket of m copies yields
+    O(m²) pairs: bucket skew, where a block-purging bound would go."""
+    a = a.select("*", F.posexplode("keys").alias("band", "key")).alias("a")
+    b = b.select("*", F.posexplode("keys").alias("band", "key")).alias("b")
+    no_earlier = ~F.exists(
+        F.zip_with(
+            F.slice(F.col("a.keys"), F.lit(1), F.col("a.band")),
+            F.slice(F.col("b.keys"), F.lit(1), F.col("a.band")),
+            lambda x, y: x == y,
+        ),
+        lambda m: m,
+    )
+    return a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.key") == F.col("b.key"))
+        & pair(F.col("a.id"), F.col("b.id"))
+        & no_earlier,
+    )
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     k: int = 9,
@@ -132,7 +178,7 @@ def minhash_lsh_pairs(
     s-curve threshold ~ (1/4)^(1/4) ≈ 0.70 candidate knee."""
     rows_per_band = num_perm // bands
     sig = minhash_signatures(docs, k, num_perm, id_col, text_col)
-    buckets_arr = F.array(
+    keys = F.array(
         *[
             F.xxhash64(
                 *[F.col("sig")[i] for i in range(b * rows_per_band, (b + 1) * rows_per_band)]
@@ -140,38 +186,10 @@ def minhash_lsh_pairs(
             for b in range(bands)
         ]
     )
-    bands_df = sig.select(
-        "doc_id",
-        "sig",
-        buckets_arr.alias("buckets"),
-        F.posexplode(buckets_arr).alias("band", "bucket"),
-    )
-    a, b = bands_df.alias("a"), bands_df.alias("b")
-    # first-matching-band dedup AT JOIN TIME (same construction as
-    # similarity.lsh_topk): a pair colliding in m bands used to produce m
-    # join rows and pay a full dropDuplicates SHUFFLE of the candidate set
-    # to collapse them; keeping only the collision whose band has no
-    # earlier matching band yields exactly one row per pair inside the
-    # same shuffle — one exchange removed from the scale path. Signatures
-    # are deterministic per doc, so the surviving row carries the same
-    # sig_a/sig_b the dropDuplicates pick did.
-    no_earlier = ~F.exists(
-        F.zip_with(
-            F.slice(F.col("a.buckets"), F.lit(1), F.col("a.band")),
-            F.slice(F.col("b.buckets"), F.lit(1), F.col("a.band")),
-            lambda x, y: x == y,
-        ),
-        lambda m: m,
-    )
-    cand = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-        & no_earlier,
-    ).select(
-        F.col("a.doc_id").alias("id_a"),
-        F.col("b.doc_id").alias("id_b"),
+    banded = sig.select(F.col("doc_id").alias("id"), "sig", keys.alias("keys"))
+    cand = band_pairs(banded, banded, operator.lt).select(
+        F.col("a.id").alias("id_a"),
+        F.col("b.id").alias("id_b"),
         F.col("a.sig").alias("sig_a"),
         F.col("b.sig").alias("sig_b"),
     )
@@ -267,7 +285,7 @@ def simhash_pairs(
     exact Hamming distance."""
     width = 64 // bands
     sig = simhash_signatures(docs, id_col, text_col)
-    keys_arr = F.array(
+    keys = F.array(
         *[
             F.shiftrightunsigned(F.col("sig"), i * width).bitwiseAND(
                 F.lit((1 << width) - 1)
@@ -275,35 +293,10 @@ def simhash_pairs(
             for i in range(bands)
         ]
     )
-    bands_df = sig.select(
-        "doc_id",
-        "sig",
-        keys_arr.alias("keys"),
-        F.posexplode(keys_arr).alias("band", "key"),
-    )
-    a, b = bands_df.alias("a"), bands_df.alias("b")
-    # first-matching-band dedup at join time (see minhash_lsh_pairs): one
-    # candidate row per pair inside the band join's own shuffle, replacing
-    # the dropDuplicates exchange the old form paid to collapse multi-band
-    # collisions. sig is deterministic per doc, so surviving rows are
-    # identical to the dropDuplicates pick.
-    no_earlier = ~F.exists(
-        F.zip_with(
-            F.slice(F.col("a.keys"), F.lit(1), F.col("a.band")),
-            F.slice(F.col("b.keys"), F.lit(1), F.col("a.band")),
-            lambda x, y: x == y,
-        ),
-        lambda m: m,
-    )
-    cand = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.key") == F.col("b.key"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-        & no_earlier,
-    ).select(
-        F.col("a.doc_id").alias("id_a"),
-        F.col("b.doc_id").alias("id_b"),
+    banded = sig.select(F.col("doc_id").alias("id"), "sig", keys.alias("keys"))
+    cand = band_pairs(banded, banded, operator.lt).select(
+        F.col("a.id").alias("id_a"),
+        F.col("b.id").alias("id_b"),
         F.col("a.sig").alias("sig_a"),
         F.col("b.sig").alias("sig_b"),
     )
@@ -525,8 +518,12 @@ def cosine_arrow(a, b):
     done here: callers keep ``F.round`` JVM-side (Spark's HALF_UP decimal
     rounding is not numpy's).
 
+    Integer arrays (the int8 ``qvec`` of quantized embeddings) are widened
+    to int64, so products and sums are exact whatever the order; only the
+    final int -> double conversion, the sqrts and the division round.
+
     Contract: both columns are non-null equal-length arrays of non-null
-    doubles (the internal call sites cast from the embeddings table, which
+    numbers (the internal call sites cast from the embeddings table, which
     guarantees it). Whole-array nulls return null like the expression form;
     rows with mismatched lengths return null (the expression form's
     null-padded zip_with also yields null there). Element-level nulls
@@ -539,26 +536,34 @@ def cosine_arrow(a, b):
         try:
             A = np.stack(av.values)
             B = np.stack(bv.values)
-            if A.dtype != np.float64 or B.dtype != np.float64 or A.shape != B.shape:
+            if A.shape != B.shape:
+                raise ValueError
+            if A.dtype.kind in "iu" and B.dtype.kind in "iu":
+                A, B = A.astype(np.int64), B.astype(np.int64)
+            elif A.dtype != np.float64 or B.dtype != np.float64:
                 raise ValueError
         except (ValueError, TypeError):
-            # ragged / null rows: exact per-row replay of the fold
+            # ragged / null rows: exact per-row replay of the fold, on
+            # Python ints/floats (numpy int8 scalars would overflow)
             out = []
             for x, y in zip(av.values, bv.values):
                 if x is None or y is None or len(x) != len(y):
                     out.append(None)
                     continue
-                acc = 0.0
+                x, y = x.tolist(), y.tolist()
+                acc = 0
                 for xi, yi in zip(x, y):
                     acc += xi * yi
-                sa = 0.0
+                sa = 0
                 for xi in x:
                     sa += xi * xi
-                sb = 0.0
+                sb = 0
                 for yi in y:
                     sb += yi * yi
-                na_, nb_ = math.sqrt(sa), math.sqrt(sb)
-                out.append(acc / (na_ * nb_))
+                # numpy division: a zero norm gives NaN/inf as in the
+                # batch path, where Python's float division would raise
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    out.append(np.float64(acc) / (math.sqrt(sa) * math.sqrt(sb)))
             return pd.Series(out, dtype="float64")
         if A.shape[1] == 0:
             # empty vectors: the fold yields 0.0/(0.0*0.0) = NaN

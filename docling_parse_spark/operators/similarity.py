@@ -10,16 +10,36 @@
 * ``ivf_train`` / ``ivf_topk`` — inverted-file ANN (IVF-Flat): k-means
   coarse quantizer trained once on a deterministic hash sample (a bounded
   driver-side build step, like fitting any model), corpus rows assigned to
-  their nearest centroid cell with pure JVM expressions, queries probe the
+  their nearest centroid cell by an Arrow-batched matmul, queries probe the
   ``nprobe`` nearest cells — the scan touches |corpus|·nprobe/n_cells rows.
+* ``quantize_embeddings`` / ``brute_force_topk_quantized`` — int8 vectors,
+  exact integer dot products.
+
+Every operator scores with ``dedup.cosine_arrow`` and ranks with one
+``_rank_topk`` window; ``lsh_topk``'s candidates come from
+``dedup.band_pairs``, the banded join minhash and simhash also use.
 """
 
 from __future__ import annotations
 
+import operator
+
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from docling_parse_spark.operators.dedup import cosine_arrow
+from docling_parse_spark.operators.dedup import band_pairs, cosine_arrow
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Top-k per query over (query_id, neighbor_id, cos) rows ->
+    (query_id, neighbor_id, cos, rank). Deterministic: ties broken by
+    neighbor id ascending."""
+    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cos", "rank")
+    )
 
 
 def brute_force_topk(
@@ -37,17 +57,10 @@ def brute_force_topk(
     c = emb.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cv")
     )
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", F.round(cosine_arrow(F.col("qv"), F.col("cv")), 6))
-        .select("query_id", "neighbor_id", "cos")
+    scored = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")).select(
+        "query_id", "neighbor_id", F.round(cosine_arrow(F.col("qv"), F.col("cv")), 6).alias("cos")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 1234) -> list[list[float]]:
@@ -57,22 +70,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 1234) -> list[list[float]]
 
     rng = random.Random(seed)
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
-
-
-def lsh_signature(vec_col, planes: list[list[float]]):
-    """Sign-bit signature as a long (one bit per hyperplane, <= 63 planes) —
-    pure JVM expressions; planes arrive as array literals."""
-    if len(planes) > 63:
-        raise ValueError("lsh_signature packs into one long; use <= 63 planes "
-                         "(lsh_topk uses per-band keys and has no such cap)")
-    sig = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        arr = F.array(*[F.lit(float(v)) for v in plane])
-        dot = F.aggregate(
-            F.zip_with(vec_col, arr, lambda x, y: x * y), F.lit(0.0), lambda a, v: a + v
-        )
-        sig = sig + F.when(dot > 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
-    return sig
 
 
 def _band_keys_udf(planes: list[list[float]], bands: int):
@@ -128,69 +125,22 @@ def lsh_topk(
             f"lsh_topk: n_planes ({n_planes}) must be a positive multiple "
             f"of bands ({bands})"
         )
-    planes = _hyperplanes(dim, n_planes, seed)
-    keys_udf = _band_keys_udf(planes, bands)
+    keys_udf = _band_keys_udf(_hyperplanes(dim, n_planes, seed), bands)
 
-    def with_bands(df, idc):
-        # keep the full per-band key array alongside the exploded
-        # (band, key) join columns: the first-matching-band predicate below
-        # needs to look back at earlier bands
-        keyed = df.select(idc, "v", keys_udf("v").alias("keys"))
-        return keyed.select(
-            idc, "v", "keys", F.posexplode("keys").alias("band", "key")
+    def banded(df):
+        v = F.col(vec_col).cast("array<double>")
+        return df.select(F.col(id_col).alias("id"), v.alias("v")).select(
+            "id", "v", keys_udf("v").alias("keys")
         )
 
-    q = with_bands(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("v")),
-        "query_id",
+    # corpus × broadcast queries, one row per candidate pair (band_pairs)
+    cand = band_pairs(banded(emb), F.broadcast(banded(queries)), operator.ne)
+    scored = cand.select(
+        F.col("b.id").alias("query_id"),
+        F.col("a.id").alias("neighbor_id"),
+        F.round(cosine_arrow(F.col("b.v"), F.col("a.v")), 6).alias("cos"),
     )
-    c = with_bands(
-        emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("v")),
-        "neighbor_id",
-    )
-    qa = q.select(
-        F.col("query_id"), F.col("v").alias("qv"), F.col("keys").alias("qkeys"),
-        F.col("band").alias("qband"), F.col("key").alias("qkey"),
-    )
-    ca = c.select(
-        F.col("neighbor_id"), F.col("v").alias("cv"), F.col("keys").alias("ckeys"),
-        F.col("band").alias("cband"), F.col("key").alias("ckey"),
-    )
-    # first-matching-band dedup AT JOIN TIME: a pair colliding in b bands
-    # used to produce b candidate rows, each carrying both vectors into the
-    # scoring stage — at 32 planes/16 bands (2-bit keys) nearly every pair
-    # collides in ~4 bands, so the Python scoring boundary moved ~4x the
-    # bytes and computed ~4x the cosines it needed. Keeping only the
-    # collision whose band has no earlier matching band yields exactly ONE
-    # row per candidate pair (same pair set — the first matching band always
-    # survives), stays a broadcast HASH join on (band, key), and the
-    # slice/zip_with check costs <= bands interpreted steps vs ~3*dim for a
-    # wasted cosine.
-    no_earlier_match = ~F.exists(
-        F.zip_with(
-            F.slice(F.col("ckeys"), F.lit(1), F.col("cband")),
-            F.slice(F.col("qkeys"), F.lit(1), F.col("cband")),
-            lambda x, y: x == y,
-        ),
-        lambda m: m,
-    )
-    cand = ca.join(
-        F.broadcast(qa),
-        (F.col("cband") == F.col("qband"))
-        & (F.col("ckey") == F.col("qkey"))
-        & (F.col("neighbor_id") != F.col("query_id"))
-        & no_earlier_match,
-    ).select("query_id", "neighbor_id", "qv", "cv")
-    # no_earlier_match leaves one row per candidate pair: score, then rank
-    scored = cand.withColumn("cos", F.round(cosine_arrow(F.col("qv"), F.col("cv")), 6)).select(
-        "query_id", "neighbor_id", "cos"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def _cell_udfs(centroids: list[list[float]], nprobe: int):
@@ -321,21 +271,13 @@ def ivf_topk(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("v"))
         .select("query_id", F.col("v").alias("qv"), F.explode(probe_cells("v")).alias("qcell"))
     )
-    scored = (
-        c.join(
-            F.broadcast(q),
-            (F.col("ccell") == F.col("qcell")) & (F.col("neighbor_id") != F.col("query_id")),
-        )
-        .select("query_id", "neighbor_id", "qv", "v")
-        .withColumn("cos", F.round(cosine_arrow(F.col("qv"), F.col("v")), 6))
-        .select("query_id", "neighbor_id", "cos")
+    scored = c.join(
+        F.broadcast(q),
+        (F.col("ccell") == F.col("qcell")) & (F.col("neighbor_id") != F.col("query_id")),
+    ).select(
+        "query_id", "neighbor_id", F.round(cosine_arrow(F.col("qv"), F.col("v")), 6).alias("cos")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 # ------------------------------------------------------------ quantization
@@ -402,38 +344,13 @@ def brute_force_topk_quantized(
         F.col(id_col).alias("query_id"), F.col("qvec").alias("qv")
     )
     c = qemb.select(F.col(id_col).alias("neighbor_id"), F.col("qvec").alias("cv"))
-
-    # Arrow-batched exact integer-dot cosine: int64 sums are exact whatever
-    # the summation order, so the numpy form is bit-identical to the old
-    # interpreted zip_with/aggregate folds by construction (the final
-    # int->double conversion, sqrts and division are single correctly-
-    # rounded ops in the same order). Rounding stays JVM-side (F.round).
-    import numpy as np
-
-    @F.pandas_udf("double")
-    def int_cos(av: pd.Series, bv: pd.Series) -> pd.Series:
-        A = np.stack(av.values).astype(np.int64)
-        B = np.stack(bv.values).astype(np.int64)
-        dot = (A * B).sum(axis=1)
-        na = np.sqrt((A * A).sum(axis=1).astype(np.float64))
-        nb = np.sqrt((B * B).sum(axis=1).astype(np.float64))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            return pd.Series(dot.astype(np.float64) / (na * nb))
-
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id",
             "neighbor_id",
-            F.round(int_cos(F.col("qv"), F.col("cv")), 6).alias("cos"),
+            F.round(cosine_arrow(F.col("qv"), F.col("cv")), 6).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    return _rank_topk(scored, k)

@@ -102,6 +102,18 @@ def test_lsh_topk_recall(spark):
     pairs = [(r["query_id"], r["neighbor_id"]) for r in top5]
     assert len(pairs) == len(set(pairs)) == 5 * 6
     assert sorted(r["rank"] for r in top5 if r["query_id"] == 0) == [1, 2, 3, 4, 5]
+    # k >= corpus size: the candidate set itself — exactly the pairs whose
+    # band keys agree in >= 1 band, each once, scored like brute force
+    every = lsh_topk(emb, queries, k=len(rows), n_planes=8, bands=4, dim=3).collect()
+    got = [(r["query_id"], r["neighbor_id"]) for r in every]
+    assert len(got) == len(set(got))
+    assert set(got) == {
+        (q, j) for q in range(6) for j in keys
+        if j != q and any(a == b for a, b in zip(keys[q], keys[j]))
+    }
+    exact_cos = {(r["query_id"], r["neighbor_id"]): r["cos"]
+                 for r in brute_force_topk(emb, queries, k=len(rows)).collect()}
+    assert all(r["cos"] == exact_cos[(r["query_id"], r["neighbor_id"])] for r in every)
 
 
 def test_winnowing_fingerprint_robust_to_small_edit(spark):
@@ -722,6 +734,37 @@ def test_quantize_embeddings_roundtrip_and_topk(spark):
         quantize_embeddings(emb, scale=0.0)
 
 
+def test_quantized_topk_null_and_ragged_rows(spark):
+    """brute_force_topk_quantized scores a batch holding a null and a
+    ragged qvec: those rows get a null cos, and the valid rows of the same
+    Arrow batch keep the cos and rank of a clean batch. Large int8 values
+    make the per-row path overflow if it multiplied numpy int8 scalars."""
+    from docling_parse_spark.operators.similarity import brute_force_topk_quantized
+
+    schema = "vec_id int, qvec array<tinyint>, scale double"
+    clean = [
+        (0, [127, -127, 100], 1.0),
+        (1, [120, -120, 90], 1.0),
+        (2, [-127, 127, -100], 1.0),
+        (3, [127, 127, 127], 1.0),
+        (4, [1, 0, -1], 1.0),
+    ]
+    dirty = clean + [(5, None, 1.0), (6, [127, -127], 1.0)]
+
+    def topk(rows):
+        # one partition: every corpus row in the same Arrow batch
+        qemb = spark.createDataFrame(rows, schema).coalesce(1)
+        queries = spark.createDataFrame(clean[:2], schema)
+        return {(r["query_id"], r["neighbor_id"]): (r["cos"], r["rank"])
+                for r in brute_force_topk_quantized(qemb, queries, k=len(rows)).collect()}
+
+    base, got = topk(clean), topk(dirty)
+    for q in (0, 1):
+        assert got[(q, 5)][0] is None and got[(q, 6)][0] is None
+    assert {p: v for p, v in got.items() if p[1] < 5} == base
+    assert base[(0, 1)][0] > 0.99 and base[(0, 2)][0] < -0.99
+
+
 def test_banded_pair_dedup_at_join_time(spark, docs):
     """r07: both banded generators collapse multi-band collisions at join
     time (first-matching-band predicate) instead of a dropDuplicates
@@ -744,6 +787,9 @@ def test_banded_pair_dedup_at_join_time(spark, docs):
     assert len(keys) == len(set(keys)), "duplicate candidate rows emitted"
     assert {(1, 2)} <= set(keys)
 
+    # the reference compares raw band values, while the operator joins on
+    # xxhash64 bucket hashes of them: it assumes no bucket-hash collisions,
+    # which holds at this corpus size
     sigs = {r["doc_id"]: list(r["sig"]) for r in minhash_signatures(docs, k=8).collect()}
     expected = {}
     ids = sorted(sigs)

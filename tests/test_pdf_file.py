@@ -873,10 +873,19 @@ def test_multiselect_choice_value_does_not_inherit_past_nearest_v():
 
 def test_oversized_file_is_error_accounted(spark, tmp_path):
     """A GB-scale outlier must not hold a whole Arrow batch hostage:
-    above max_file_bytes the file is error-accounted, not parsed."""
-    from docling_parse_spark.pdf.file import ingest_pdf_files, pdf_files_to_docs
+    above max_file_bytes the file is error-accounted, not parsed, on the
+    span lane and the media lane alike."""
+    from docling_parse_spark.pdf.file import pdf_files_to_docs, pdf_files_to_media
 
-    (tmp_path / "ok.pdf").write_bytes(build_classic_pdf(minimal_objects(CONTENT), root=1))
+    pixels = zlib.compress(bytes(range(64)))
+    objs = minimal_objects(b"q 8 0 0 8 10 10 cm /ImA Do Q")
+    objs[3] = (b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R "
+               b"/Resources << /Font << /F1 5 0 R >> /XObject << /ImA 6 0 R >> >> >>")
+    objs[6] = (f"<< /Type /XObject /Subtype /Image /Width 8 /Height 8 "
+               f"/ColorSpace /DeviceGray /BitsPerComponent 8 "
+               f"/Filter /FlateDecode /Length {len(pixels)} >>\nstream\n".encode()
+               + pixels + b"\nendstream")
+    (tmp_path / "ok.pdf").write_bytes(build_classic_pdf(objs, root=1))
     (tmp_path / "big.pdf").write_bytes(b"%PDF-1.7\n" + b"\x00" * 4096)
     files = spark.read.format("binaryFile").load(str(tmp_path))
     rows = {r["doc_id"].rsplit("/", 1)[-1]: r
@@ -884,6 +893,13 @@ def test_oversized_file_is_error_accounted(spark, tmp_path):
     assert rows["ok.pdf"]["error"] is None and rows["ok.pdf"]["spans"]
     assert "FileTooLarge" in rows["big.pdf"]["error"]
     assert rows["big.pdf"]["spans"] == []
+    media = {r["doc_id"].rsplit("/", 1)[-1]: r
+             for r in pdf_files_to_media(files, max_file_bytes=2048).collect()}
+    assert media["ok.pdf"]["error"] is None
+    assert media["ok.pdf"]["media_ref"].endswith("/p0/ImA")
+    assert media["big.pdf"]["error"] == "FileTooLarge: 4105 bytes > max_file_bytes=2048"
+    assert media["big.pdf"]["payload"] is None
+    assert len(media) == 2
 
 
 def test_freed_object_is_not_resurrected():
