@@ -70,6 +70,27 @@ def parse_media_ref(media_ref: str) -> tuple[int, str] | None:
     return int(m.group(1)), m.group(2)
 
 
+def _parse_form(blob) -> tuple[str, dict] | None:
+    """One ``pdf_form`` blob (JSON text or its parsed dict) -> (name,
+    {"ops", "matrix", "filters"}), or None when it is malformed or unnamed.
+
+    The blob is ``{"name", "ops" (raw content stream), "matrix" [6],
+    "filters"?}``; ``filters`` declares the transport of a binary body
+    (raw-PDF ingest ships non-UTF8 form bodies as ASCII85 — the same
+    contract as the pdf_page descriptor's content_filters)."""
+    try:
+        f = json.loads(blob) if isinstance(blob, str) else blob
+    except Exception:  # incl. RecursionError from hostile nesting (r4 review)
+        return None
+    if not (isinstance(f, dict) and f.get("name")):
+        return None
+    return str(f["name"]), {
+        "ops": f.get("ops") or "",
+        "matrix": f.get("matrix"),
+        "filters": f.get("filters"),
+    }
+
+
 def build_doc_resources(spans: list[dict]) -> dict:
     """Collect doc-level resources: fonts, form XObjects, page descriptors,
     media maps. Forms are doc-level like fonts (the reference parent-chains
@@ -90,20 +111,9 @@ def build_doc_resources(spans: list[dict]) -> dict:
             except Exception:  # incl. RecursionError from hostile nesting (r4 review)
                 pass
         elif s["kind"] == "pdf_form" and s.get("text"):
-            # {"name", "ops" (raw content stream), "matrix" [6],
-            #  "filters"?: declared transport for binary streams (raw-PDF
-            #  ingest ships non-UTF8 form bodies as ASCII85 — same contract
-            #  as the pdf_page descriptor's content_filters)}
-            try:
-                f = json.loads(s["text"])
-                if isinstance(f, dict) and f.get("name"):
-                    forms[str(f["name"])] = {
-                        "ops": f.get("ops") or "",
-                        "matrix": f.get("matrix"),
-                        "filters": f.get("filters"),
-                    }
-            except Exception:  # incl. RecursionError from hostile nesting (r4 review)
-                pass
+            form = _parse_form(s["text"])
+            if form:
+                forms[form[0]] = form[1]
         elif s["kind"] == "pdf_page" and s.get("text"):
             try:
                 desc = json.loads(s["text"])
@@ -454,18 +464,7 @@ def doc_to_units(doc_id: str, spans: list[dict], serialize: bool = True) -> list
                     # for this unit only, like page-scoped fonts
                     if isinstance(desc, dict) and desc.get("forms"):
                         merged = dict(res["forms"] or {})
-                        for fo in desc["forms"]:
-                            if isinstance(fo, str):
-                                try:
-                                    fo = json.loads(fo)
-                                except Exception:
-                                    continue
-                            if isinstance(fo, dict) and fo.get("name"):
-                                merged[str(fo["name"])] = {
-                                    "ops": fo.get("ops") or "",
-                                    "matrix": fo.get("matrix"),
-                                    "filters": fo.get("filters"),
-                                }
+                        merged.update(f for f in map(_parse_form, desc["forms"]) if f)
                         res["forms"] = merged
                 except Exception:
                     pass

@@ -6,7 +6,11 @@ to QPDF; the object/xref machinery is qpdf's). This container has no
 qpdf, so this module implements the file layer from the spec and emits
 the north-rule span rows the rest of the engine consumes:
 
-* object syntax: names/numbers/strings/arrays/dicts/streams/refs (§7.3)
+* object syntax: names/numbers/strings/arrays/dicts/streams/refs (§7.3);
+  ``_Lexer`` extends the content-stream lexer (:mod:`.tokenizer`), the one
+  scanner of §7.3 tokens, with objects and ``n g R`` references, and
+  raises ValueError where the tokenizer repairs (an unterminated literal
+  string, a non-hex byte in a hex string)
 * classic xref tables with /Prev chains (§7.5.4) and incremental updates
 * cross-reference STREAMS (/Type /XRef, /W, /Index — §7.5.8), decoded
   through :mod:`docling_parse_spark.pdf.filters` (Flate + PNG predictors)
@@ -31,15 +35,18 @@ accounting. Linearization hints are ignored (harmless).
 
 from __future__ import annotations
 
+import base64
 import json
 import re
 import zlib
 from dataclasses import dataclass
 
 from docling_parse_spark.pdf.filters import apply_filters
+from docling_parse_spark.pdf.tokenizer import _BARE_RE, Lexer
 
-_WS = b"\x00\t\n\x0c\r "
-_DELIM = b"()<>[]{}/%"
+_CONSTANTS = {b"true": True, b"false": False, b"null": None}
+_NUMBER_RE = re.compile(rb"[-+.0-9]+")
+_DIGITS_RE = re.compile(rb"[0-9]+")
 
 # PDFDocEncoding (ISO 32000-1 Annex D.2) deltas vs Latin-1: 0x18-0x1F are
 # accent chars, 0x80-0x9E the typographic set (Latin-1 has C1 controls
@@ -75,156 +82,57 @@ def _xml_unescape(s: str) -> str:
     return html.unescape(s)
 
 
-class _Lexer:
-    """Object-syntax scanner (§7.3) over the whole file buffer."""
-
-    def __init__(self, data: bytes, pos: int = 0):
-        self.data = data
-        self.pos = pos
-
-    def _skip_ws(self):
-        d = self.data
-        n = len(d)
-        while self.pos < n:
-            c = d[self.pos]
-            if c in _WS:
-                self.pos += 1
-            elif c == 0x25:  # % comment to EOL
-                while self.pos < n and d[self.pos] not in b"\r\n":
-                    self.pos += 1
-            else:
-                return
+class _Lexer(Lexer):
+    """Object-syntax parser (§7.3) over the whole file buffer: the
+    content-stream lexer's token scanners plus what the file syntax adds —
+    dictionaries, arrays, ``true``/``false``/``null``, and int/float numbers
+    with the ``n g R`` lookahead. Strict where the tokenizer repairs: an
+    unterminated literal string or a hex string holding a byte that is
+    neither hex nor whitespace raises ValueError (a per-file failure)."""
 
     def parse_object(self):
         """One object at the cursor -> python value (Ref for 'n g R')."""
         self._skip_ws()
         d = self.data
-        if self.pos >= len(d):
+        pos = self.pos
+        if pos >= self.n:
             raise ValueError("unexpected end of PDF data")
-        c = d[self.pos]
+        c = d[pos]
         if c == 0x2F:  # /Name
             return self._name()
         if c == 0x28:  # (string)
-            return self._literal_string()
+            s = self._literal_string()
+            if self.unclosed_string:
+                raise ValueError("unterminated literal string")
+            return s
         if c == 0x3C:
-            if d[self.pos : self.pos + 2] == b"<<":
+            if d[pos + 1 : pos + 2] == b"<":
                 return self._dict()
-            return self._hex_string()
+            # strict posture (ADVICE r4): dropping a corrupt byte decodes
+            # to SHIFTED bytes; surface it like every other malformed
+            # construct here
+            s = self._hex_string()
+            at = self.hex_junk_at
+            if at >= 0:
+                raise ValueError(f"invalid byte 0x{d[at]:02x} in hex string at {at}")
+            return s
         if c == 0x5B:  # [
             self.pos += 1
             out = []
             while True:
                 self._skip_ws()
-                if self.pos < len(d) and d[self.pos] == 0x5D:
+                if self.pos < self.n and d[self.pos] == 0x5D:
                     self.pos += 1
                     return out
                 out.append(self.parse_object())
         if c in b"+-.0123456789":
             return self._number_or_ref()
-        kw = self._keyword()
-        if kw == b"true":
-            return True
-        if kw == b"false":
-            return False
-        if kw == b"null":
-            return None
-        raise ValueError(f"unexpected token {kw!r} at {self.pos}")
-
-    def _keyword(self) -> bytes:
-        d = self.data
-        start = self.pos
-        while self.pos < len(d) and d[self.pos] not in _WS and d[self.pos] not in _DELIM:
-            self.pos += 1
-        if self.pos == start:
-            self.pos += 1  # lone delimiter: consume to make progress
-        return d[start : self.pos]
-
-    def _name(self) -> str:
-        d = self.data
-        self.pos += 1
-        start = self.pos
-        while self.pos < len(d) and d[self.pos] not in _WS and d[self.pos] not in _DELIM:
-            self.pos += 1
-        raw = d[start : self.pos]
-        if b"#" in raw:
-            out = bytearray()
-            i = 0
-            hexd = b"0123456789abcdefABCDEF"
-            while i < len(raw):
-                if raw[i] == 0x23 and i + 2 < len(raw) and raw[i + 1] in hexd and raw[i + 2] in hexd:
-                    out.append(int(raw[i + 1 : i + 3], 16))
-                    i += 3
-                else:
-                    out.append(raw[i])
-                    i += 1
-            raw = bytes(out)
-        return raw.decode("utf-8", "replace")
-
-    def _literal_string(self) -> bytes:
-        d = self.data
-        self.pos += 1
-        out = bytearray()
-        depth = 1
-        esc = {0x6E: 10, 0x72: 13, 0x74: 9, 0x62: 8, 0x66: 12}
-        while self.pos < len(d):
-            c = d[self.pos]
-            if c == 0x5C:  # backslash
-                self.pos += 1
-                if self.pos >= len(d):
-                    break
-                e = d[self.pos]
-                if e in esc:
-                    out.append(esc[e])
-                    self.pos += 1
-                elif 0x30 <= e <= 0x37:  # up to 3 octal digits
-                    val = 0
-                    k = 0
-                    while k < 3 and self.pos < len(d) and 0x30 <= d[self.pos] <= 0x37:
-                        val = val * 8 + (d[self.pos] - 0x30)
-                        self.pos += 1
-                        k += 1
-                    out.append(val & 0xFF)
-                elif e in b"\r\n":  # line continuation
-                    self.pos += 1
-                    if e == 0x0D and self.pos < len(d) and d[self.pos] == 0x0A:
-                        self.pos += 1
-                else:
-                    out.append(e)
-                    self.pos += 1
-            elif c == 0x28:
-                depth += 1
-                out.append(c)
-                self.pos += 1
-            elif c == 0x29:
-                depth -= 1
-                self.pos += 1
-                if depth == 0:
-                    return bytes(out)
-                out.append(c)
-            else:
-                out.append(c)
-                self.pos += 1
-        raise ValueError("unterminated literal string")
-
-    def _hex_string(self) -> bytes:
-        d = self.data
-        self.pos += 1
-        digits = bytearray()
-        while self.pos < len(d) and d[self.pos] != 0x3E:
-            if d[self.pos] in b"0123456789abcdefABCDEF":
-                digits.append(d[self.pos])
-            elif d[self.pos] not in _WS:
-                # strict posture (ADVICE r4): silently skipping a corrupt
-                # byte decodes to SHIFTED bytes; surface as a per-file
-                # failure like every other malformed construct here
-                raise ValueError(
-                    f"invalid byte 0x{d[self.pos]:02x} in hex string at {self.pos}"
-                )
-            self.pos += 1
-        self.pos += 1  # '>'
-        if len(digits) % 2:
-            digits.append(0x30)
-        return bytes.fromhex(digits.decode())
+        m = _BARE_RE.match(d, pos)
+        kw = m.group() if m else d[pos : pos + 1]
+        if kw in _CONSTANTS:
+            self.pos = m.end()
+            return _CONSTANTS[kw]
+        raise ValueError(f"unexpected token {kw!r} at {pos}")
 
     def _dict(self):
         d = self.data
@@ -235,7 +143,7 @@ class _Lexer:
             if d[self.pos : self.pos + 2] == b">>":
                 self.pos += 2
                 return out
-            if self.pos >= len(d):
+            if self.pos >= self.n:
                 raise ValueError("unterminated dictionary")
             key = self.parse_object()
             val = self.parse_object()
@@ -244,10 +152,9 @@ class _Lexer:
 
     def _number_or_ref(self):
         d = self.data
-        start = self.pos
-        while self.pos < len(d) and d[self.pos] in b"+-.0123456789":
-            self.pos += 1
-        tok = d[start : self.pos]
+        m = _NUMBER_RE.match(d, self.pos)
+        tok = m.group()
+        self.pos = m.end()
         try:
             num = float(tok) if b"." in tok else int(tok)
         except ValueError as e:
@@ -256,19 +163,14 @@ class _Lexer:
         if isinstance(num, int) and num >= 0:
             save = self.pos
             self._skip_ws()
-            start2 = self.pos
-            while self.pos < len(d) and d[self.pos] in b"0123456789":
-                self.pos += 1
-            gen_tok = d[start2 : self.pos]
-            if gen_tok:
+            gen = _DIGITS_RE.match(d, self.pos)
+            if gen:
+                self.pos = gen.end()
                 self._skip_ws()
-                if d[self.pos : self.pos + 1] == b"R" and (
-                    self.pos + 1 >= len(d)
-                    or d[self.pos + 1] in _WS
-                    or d[self.pos + 1] in _DELIM
-                ):
-                    self.pos += 1
-                    return Ref(num, int(gen_tok))
+                r = _BARE_RE.match(d, self.pos)
+                if r and r.group() == b"R":
+                    self.pos = r.end()
+                    return Ref(num, int(gen.group()))
             self.pos = save
         return num
 
@@ -824,18 +726,14 @@ class PdfFile:
         """Form XObject -> (pdf_form JSON blob, [(font_key, blob)]) — the
         engine's doc-level form shape (document.py build_doc_resources).
         Binary bodies ride as declared ASCII85 transport (Arrow-safe)."""
-        import base64
-
         ops = self._decode_stream(sdict, raw)
         d: dict = {"name": name}
         mtx = self._resolve(sdict.get("Matrix"))
         if isinstance(mtx, list) and len(mtx) == 6:
             d["matrix"] = [float(self._resolve(x)) for x in mtx]
-        try:
-            d["ops"] = ops.decode("utf-8")
-        except UnicodeDecodeError:
-            d["ops"] = (base64.a85encode(ops) + b"~>").decode("ascii")
-            d["filters"] = ["ASCII85Decode"]
+        d["ops"], filters = _arrow_safe(ops)
+        if filters:
+            d["filters"] = filters
         fonts: list[tuple[str, str]] = []
         fres = self._resolve(sdict.get("Resources"))
         ffonts = self._resolve(fres.get("Font")) if isinstance(fres, dict) else None
@@ -851,8 +749,6 @@ class PdfFile:
         and /Widget form fields with their /AP /N appearance stream + its
         /Resources fonts (reference page.h:1158-1753 decodes the same set,
         including the AP sub-decode)."""
-        import base64
-
         out: list[dict] = []
         for aref in self._resolve(page.get("Annots")) or []:
             a = self._resolve(aref)
@@ -923,11 +819,9 @@ class PdfFile:
                     sdict, raw = n_obj
                     try:
                         ops = self._decode_stream(sdict, raw)
-                        try:
-                            w["ap_ops"] = ops.decode("utf-8")
-                        except UnicodeDecodeError:
-                            w["ap_ops"] = (base64.a85encode(ops) + b"~>").decode("ascii")
-                            w["ap_filters"] = ["ASCII85Decode"]
+                        w["ap_ops"], filters = _arrow_safe(ops)
+                        if filters:
+                            w["ap_filters"] = filters
                         apres = self._resolve(sdict.get("Resources"))
                         apfonts = self._resolve(apres.get("Font")) \
                             if isinstance(apres, dict) else None
@@ -1009,8 +903,6 @@ class PdfFile:
                     fdesc = fdesc or df0.get("FontDescriptor")
         fdesc_dict = self._resolve(fdesc)
         if isinstance(fdesc_dict, dict):
-            import base64
-
             for kk in ("FontFile2", "FontFile3", "FontFile"):
                 ff = fdesc_dict.get(kk)
                 ff_obj = self.get_object(ff) if isinstance(ff, Ref) else None
@@ -1043,6 +935,21 @@ class PdfFile:
                             [self._resolve(x) for x in w], self._resolve
                         )
         return json.dumps(d, sort_keys=True)
+
+
+def _arrow_safe(data: bytes) -> tuple[str, list[str] | None]:
+    """A decoded stream body -> (span text, declared transport filters).
+
+    UTF-8 bodies ride as they are. Binary ones (inline images, binary
+    string operands) would need surrogateescape strings, which break Arrow
+    serialization (r4 review: one such file killed the whole ingest task),
+    so they are wrapped in ASCII85 and declared ``["ASCII85Decode"]``; the
+    decode side reverses the declared transport and the text stays plain
+    ASCII end to end."""
+    try:
+        return data.decode("utf-8"), None
+    except UnicodeDecodeError:
+        return (base64.a85encode(data) + b"~>").decode("ascii"), ["ASCII85Decode"]
 
 
 def _cid_w_to_map(w: list, resolve) -> dict[str, float]:
@@ -1187,19 +1094,9 @@ def _parse_pdf_spans(data: bytes, doc_id: str = "", password=None) -> list[dict]
         local_forms = [b for k, b in page_forms[pno].items() if k not in form_doc_level]
         if local_forms:
             desc["forms"] = local_forms
-        content = pdf.page_content(page)
-        try:
-            payload = content.decode("utf-8")
-        except UnicodeDecodeError:
-            # binary content (inline images, binary string operands):
-            # surrogateescape strings break Arrow serialization (r4
-            # review: one such file killed the whole ingest task), so
-            # wrap in ASCII85 and let decode_unit's declared transport
-            # reverse it — the payload stays plain ASCII end to end
-            import base64
-
-            payload = (base64.a85encode(content) + b"~>").decode("ascii")
-            desc["content_filters"] = ["ASCII85Decode"]
+        payload, filters = _arrow_safe(pdf.page_content(page))
+        if filters:
+            desc["content_filters"] = filters
         page_payloads.append((json.dumps(desc, sort_keys=True), payload))
         annots_all.extend(pdf.page_annots(page, pno))
     for desc_json, _payload in page_payloads:

@@ -10,8 +10,9 @@ src/parse/pdf_resources/page_font.h:461-661) from public PDF-spec semantics:
 * code -> Unicode precedence (reference: page_font.h:543-618):
   /Encoding /Differences glyph name -> /ToUnicode CMap -> base encoding
   table -> Standard fallback -> ``GLYPH<c>`` notdef marker.
-* ``keep_glyphs=False`` squashes unresolved ``GLYPH<...>`` to a single space
-  (reference: text.h:423-436, config.h:52).
+* unresolved ``GLYPH<...>`` markers squash to a single space, the
+  reference's production ``keep_glyphs=false`` (text.h:423-436, config.h:52);
+  only ``Font.get_string(keep_glyphs=True)`` keeps them.
 * width resolution (reference: page_font.h:313-366,1784-1870): /Widths +
   /FirstChar for simple fonts; /W + /DW for CID fonts; space width defaults
   to 500/1000 em when unresolvable.
@@ -149,9 +150,10 @@ def parse_cmap(text: str) -> tuple[dict[int, str], set[int]]:
             mm = pair_re.search(body, pos)
             if not mm:
                 break
-            lo = int(re.sub(rb"\s", rb"", mm.group(1)), 16)
-            hi = int(re.sub(rb"\s", rb"", mm.group(2)), 16)
-            code_lengths.add(len(re.sub(rb"\s", rb"", mm.group(1))) // 2)
+            lo_b = from_hex(mm.group(1))
+            lo = int.from_bytes(lo_b, "big")
+            hi = int.from_bytes(from_hex(mm.group(2)), "big")
+            code_lengths.add(len(lo_b))
             pos = mm.end()
             if pos < len(body) and body[pos : pos + 1] == b"[":
                 # array form: one dst string per code in [lo, hi]
@@ -227,21 +229,22 @@ class Font:
     # name-keyed widths from an embedded CFF (pdf/cff.py) or bare Type1
     # (pdf/type1.py) program
     cff_widths: dict | None = None
-    # (code, nbytes, keep_glyphs) -> (string, width) memo: the resolve chain
+    # (code, nbytes) -> (string, width, ltr) memo: the resolve chain
     # walks several dict fallbacks per glyph and Tj streams repeat codes
     # heavily; fonts are cached per resources blob across a partition's
     # pages, so the memo amortizes across the whole batch
     _memo: dict = field(default_factory=dict, repr=False, compare=False)
     _space_w: float | None = field(default=None, repr=False, compare=False)
 
-    def decode_glyph(self, code: int, nbytes: int, keep_glyphs: bool) -> tuple[str, float, bool]:
+    def decode_glyph(self, code: int, nbytes: int) -> tuple[str, float, bool]:
         """Memoized (get_string, get_width, is_ltr) — the per-glyph hot path
         (string resolve walks several dict fallbacks, the RTL classifier
-        scans unicode ranges; Tj streams repeat codes heavily)."""
-        key = (code, nbytes, keep_glyphs)
+        scans unicode ranges; Tj streams repeat codes heavily). Unresolved
+        ``GLYPH<...>`` markers are squashed to a space, as in production."""
+        key = (code, nbytes)
         hit = self._memo.get(key)
         if hit is None:
-            s = self.get_string(code, keep_glyphs, nbytes)
+            s = self.get_string(code, False, nbytes)
             hit = (s, self.get_width(code, nbytes), not _is_rtl(s))
             self._memo[key] = hit
         return hit

@@ -209,7 +209,6 @@ class PageInterpreter:
         images: dict[str, str] | None = None,
         forms: dict[str, dict] | None = None,
         colorspaces: dict[str, int] | None = None,
-        keep_glyphs: bool = False,
         max_form_depth: int = 8,
     ):
         self.fonts = fonts
@@ -217,7 +216,6 @@ class PageInterpreter:
         self.forms = forms or {}  # xobject name -> {"ops": [...], "matrix": 6-tuple}
         # ColorSpace resource name -> component count (/ICCBased /N etc.)
         self.colorspaces = colorspaces or {}
-        self.keep_glyphs = keep_glyphs
         self.max_form_depth = max_form_depth
 
         self.gs = GraphicsState()
@@ -413,7 +411,6 @@ class PageInterpreter:
             return
         fs = t.font_size
         decode_glyph = font.decode_glyph
-        keep_glyphs = self.keep_glyphs
         # Type-3 glyph space comes from /FontMatrix (width_scale); every
         # other font type is the standard 1/1000 em (division kept for
         # bit-identity with the pinned fixtures)
@@ -451,7 +448,7 @@ class PageInterpreter:
         cells_append = self.cells.append
         cell_new = Cell.__new__
         for code, nbytes in font.analyse_string(raw):
-            s, w, ltr = decode_glyph(code, nbytes, keep_glyphs)
+            s, w, ltr = decode_glyph(code, nbytes)
             char_width = (w / 1000.0 if ws is None else w * ws) * fs * h_scaling
             spacing = char_spacing
             # word spacing applies to single-byte code 32 only (PDF 9.3.3)

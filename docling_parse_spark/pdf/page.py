@@ -40,8 +40,6 @@ class DecodeConfig:
     (src/parse/config.h:9-62, docling_parse/pdf_parser.py:206-267)."""
 
     output_unit: str = "word"  # 'char' | 'word' | 'line'
-    keep_glyphs: bool = False
-    emit_invisible_text: bool = True  # rendering_mode 3 cells still carry text
     emit_shapes: bool = False
     max_form_depth: int = 8
     # 'stream' = content-stream order (reference parity); 'xycut' = XY-cut
@@ -117,7 +115,6 @@ def decode_page(
             images=images,
             forms=forms,
             colorspaces=colorspaces,
-            keep_glyphs=config.keep_glyphs,
             max_form_depth=config.max_form_depth,
         )
         interp.run(instructions)
@@ -168,9 +165,6 @@ def _finish_page(res: PageResult, interp, page_desc: dict, config: DecodeConfig,
 
     cells = remove_duplicate_cells(cells)
     sanitize_text(cells)
-
-    if not config.emit_invisible_text:
-        cells = [c for c in cells if c.rendering_mode != 3]
 
     if config.output_unit == "word":
         out_cells = create_word_cells(cells, copy=False)  # char cells are ours

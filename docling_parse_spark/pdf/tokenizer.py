@@ -1,12 +1,26 @@
-"""PDF content-stream tokenizer.
+"""PDF syntax lexer (ISO 32000-1 §7.2/§7.3) and content-stream tokenizer.
 
-Produces the typed instruction list ``[(operator, [operands...]), ...]`` that the
-interpreter consumes — the same IR as the reference's
-``vector<qpdf_stream_instruction>`` (reference: src/parse/qpdf/stream_decoder.h:61-177,
-src/parse/qpdf/stream_instruction.h). The reference delegates lexing to qpdf's
-``parseContentStream``; we lex PDF content-stream syntax directly (PDF 32000-1:2008
-§7.2/§7.8.2): numbers, literal/hex strings, names, arrays, dicts, booleans, null,
-comments, and inline-image payload skipping.
+``Lexer`` holds the one implementation of each §7.3 token scanner in this
+engine: the whitespace/``%``-comment skip, the bare token (keyword, number,
+operator), the name with ``#xx`` escapes, the literal string (escapes, octal,
+line continuations, nested parens) and the hex string. Two readers use it:
+
+* ``tokenize`` — content streams, in the repair posture: malformed strings
+  are repaired and nothing raises;
+* ``pdf.file._Lexer`` — the file layer's object parser, a subclass that adds
+  dictionaries, arrays, ``true``/``false``/``null`` and ``n g R`` references
+  and raises ``ValueError`` on the two facts the scanners record:
+  ``unclosed_string`` (a literal string ran to the end of the data) and
+  ``hex_junk_at`` (position of a byte in a hex string that is neither hex
+  nor whitespace).
+
+``tokenize`` produces the typed instruction list
+``[(operator, [operands...]), ...]`` that the interpreter consumes — the same
+IR as the reference's ``vector<qpdf_stream_instruction>`` (reference:
+src/parse/qpdf/stream_decoder.h:61-177, src/parse/qpdf/stream_instruction.h).
+The reference delegates lexing to qpdf, whose tokenizer also serves both the
+file's object syntax and content streams; here it is this module. Inline-image
+payloads are skipped.
 
 Malformed-number repair (reference: stream_decoder.h:45-47,125-174):
 PDF generators in the wild emit run-together numbers like ``1.23-45`` (two
@@ -24,18 +38,22 @@ leading slash), arrays -> list, dicts -> dict, booleans -> bool, null -> [].
 from __future__ import annotations
 
 import re
+from binascii import a2b_hex
 
 _WHITESPACE = b"\x00\t\n\x0c\r "
-_DELIMS = b"()<>[]{}/%"
 # C-level scanners for the hottest per-byte loops (identical byte classes):
 # whitespace runs + %-comments-to-EOL, and bare tokens (non-ws, non-delim)
 _WS_RE = re.compile(rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)+")
-_HEX_DIGITS = frozenset(b"0123456789abcdefABCDEF")
 _BARE_RE = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]+")
 _NUM_RE = re.compile(rb"^[+-]?(\d+\.?\d*|\.\d+)$")
 # a token that is number-shaped except for embedded '-' signs
 _MALFORMED_NUM_RE = re.compile(rb"^[+-]{0,2}(\d+\.?\d*|\.\d+)(-+(\d+\.?\d*|\.\d+))+$")
 _LEADING_MINUS_RE = re.compile(rb"^-{2,}((\d+\.?\d*|\.\d+))$")
+# PDF §7.3.5: '#' + exactly two hex digits; a truncated escape stays literal
+# (a strict class: int(b'+4', 16) would accept sign characters)
+_NAME_ESC_RE = re.compile(rb"#([0-9A-Fa-f]{2})")
+_NOT_HEX = bytes(sorted(set(range(256)) - set(b"0123456789abcdefABCDEF")))
+_HEX_JUNK_RE = re.compile(rb"[^0-9A-Fa-f\x00\t\n\x0c\r ]")
 
 _ESCAPES = {
     ord("n"): b"\n",
@@ -50,9 +68,18 @@ _ESCAPES = {
 
 
 class Lexer:
-    def __init__(self, data: bytes):
+    """§7.3 token scanners over one buffer, from ``pos``.
+
+    Malformed strings are repaired, never raised on; the scanners record the
+    damage only when they meet it (class defaults cover the clean case), so
+    a well-formed token costs no extra attribute write."""
+
+    unclosed_string = False  # a literal string ran to the end of the data
+    hex_junk_at = -1  # a hex string held a byte neither hex nor ws: where
+
+    def __init__(self, data: bytes, pos: int = 0):
         self.data = data
-        self.pos = 0
+        self.pos = pos
         self.n = len(data)
 
     def _skip_ws(self) -> None:
@@ -125,88 +152,77 @@ class Lexer:
             return ("kw", tok)
 
     def _literal_string(self) -> bytes:
-        # '(' already at pos; balanced parens, backslash escapes (PDF §7.3.4.2)
+        # '(' at pos; balanced parens, backslash escapes (PDF §7.3.4.2)
         d, n = self.data, self.n
-        self.pos += 1
+        pos = self.pos + 1
         depth = 1
         out = bytearray()
-        while self.pos < n:
-            c = d[self.pos]
+        while pos < n:
+            c = d[pos]
+            pos += 1
             if c == 92:  # backslash
-                self.pos += 1
-                if self.pos >= n:
+                if pos >= n:
                     break
-                e = d[self.pos]
+                e = d[pos]
+                pos += 1
                 if e in _ESCAPES:
                     out += _ESCAPES[e]
-                    self.pos += 1
                 elif 0x30 <= e <= 0x37:  # octal, up to 3 digits
-                    oct_digits = bytearray()
-                    while self.pos < n and len(oct_digits) < 3 and 0x30 <= d[self.pos] <= 0x37:
-                        oct_digits.append(d[self.pos])
-                        self.pos += 1
-                    out.append(int(bytes(oct_digits), 8) & 0xFF)
-                elif e in (10, 13):  # line continuation
-                    self.pos += 1
-                    if e == 13 and self.pos < n and d[self.pos] == 10:
-                        self.pos += 1
+                    v = e - 0x30
+                    end = pos + 2
+                    while pos < n and pos < end and 0x30 <= d[pos] <= 0x37:
+                        v = v * 8 + d[pos] - 0x30
+                        pos += 1
+                    out.append(v & 0xFF)
+                elif e == 10 or e == 13:  # line continuation: LF, CR, CR LF
+                    if e == 13 and pos < n and d[pos] == 10:
+                        pos += 1
                 else:  # unknown escape: keep the char
                     out.append(e)
-                    self.pos += 1
             elif c == 40:  # (
                 depth += 1
                 out.append(c)
-                self.pos += 1
             elif c == 41:  # )
                 depth -= 1
-                self.pos += 1
                 if depth == 0:
-                    break
+                    self.pos = pos
+                    return bytes(out)
                 out.append(c)
             else:
                 out.append(c)
-                self.pos += 1
+        self.pos = pos
+        self.unclosed_string = True
         return bytes(out)
 
     def _hex_string(self) -> bytes:
-        d, n = self.data, self.n
-        self.pos += 1  # '<'
-        digits = bytearray()
-        while self.pos < n and d[self.pos] != 62:  # >
-            c = d[self.pos]
-            if c in b"0123456789abcdefABCDEF":
-                digits.append(c)
-            # non-hex bytes inside a hex string are dropped (malformed input)
-            self.pos += 1
-        self.pos += 1  # '>'
+        # '<' at pos; bytes that are not hex digits are dropped, an odd
+        # digit count is padded with 0 (PDF §7.3.4.3)
+        d = self.data
+        start = self.pos + 1
+        end = d.find(b">", start)
+        if end < 0:
+            end = self.n
+        self.pos = end + 1
+        raw = d[start:end]
+        digits = raw.translate(None, _NOT_HEX)
+        if len(digits) != len(raw):  # whitespace, or junk
+            m = _HEX_JUNK_RE.search(raw)
+            if m:
+                self.hex_junk_at = start + m.start()
         if len(digits) % 2:
-            digits.append(ord("0"))  # PDF: odd count padded with 0
-        return bytes.fromhex(digits.decode("ascii"))
+            digits += b"0"
+        return a2b_hex(digits)
 
     def _name(self) -> str:
-        d = self.data
-        self.pos += 1  # '/'
-        m = _BARE_RE.match(d, self.pos)
-        raw = m.group() if m else b""
-        if m:
-            self.pos = m.end()
-        # #xx hex escapes in names (PDF §7.3.5)
-        if b"#" in raw:
-            out = bytearray()
-            i = 0
-            while i < len(raw):
-                # PDF 7.3.5: exactly two hex digits; a truncated escape at
-                # end-of-name stays literal
-                if (raw[i] == ord("#") and i + 2 < len(raw)
-                        and raw[i + 1] in _HEX_DIGITS and raw[i + 2] in _HEX_DIGITS):
-                    # strict two-hex-digit check: int(b'+4', 16) would
-                    # accept sign characters (r4 review)
-                    out.append(int(raw[i + 1 : i + 3], 16))
-                    i += 3
-                    continue
-                out.append(raw[i])
-                i += 1
-            raw = bytes(out)
+        # '/' at pos; the name runs to the next whitespace or delimiter
+        m = _BARE_RE.match(self.data, self.pos + 1)
+        if m is None:
+            self.pos += 1
+            return ""
+        self.pos = m.end()
+        raw = m.group()
+        if b"#" in raw:  # #xx hex escapes (PDF §7.3.5)
+            raw = _NAME_ESC_RE.sub(lambda e: bytes((int(e.group(1), 16),)), raw)
         return raw.decode("utf-8", "replace")
 
 

@@ -14,8 +14,6 @@ import struct
 
 import numpy as np
 
-WAV_MAGIC = b"RIFF"
-
 
 def encode_wav(samples: np.ndarray, rate: int = 16000) -> bytes:
     """Encode int16 samples — shape (n,) or (n, channels) — as PCM WAV."""

@@ -324,3 +324,12 @@ def test_ttc_table_offsets_are_file_absolute():
     m = parse_truetype_metrics(data)
     assert m is not None
     assert m["units_per_em"] == 2048 and m["advances"] == [600, 450]
+
+
+def test_odd_digit_bfrange_bounds_pad_like_bfchar():
+    """PDF §7.3.4.3: an odd-digit hex string is padded with a trailing 0 —
+    for bfrange bounds as for bfchar sources, and the code length counts
+    the padded bytes."""
+    want = ({0x10: "A"}, {1})
+    assert parse_cmap("beginbfchar <1> <0041> endbfchar") == want
+    assert parse_cmap("beginbfrange <1> <1> <0041> endbfrange") == want

@@ -85,3 +85,91 @@ def test_name_with_hex_escape():
 def test_negative_and_real_numbers():
     ins = ops(b"-1.5 .25 +3 4. Td_x")
     assert ins[0][1] == [-1.5, 0.25, 3.0, 4.0]
+
+
+def _random_literal(rng):
+    """-> (token bytes, closed?) — a balanced body of plain bytes, escapes,
+    octal, CR/LF continuations and nested/escaped parens, then closed,
+    left open, left open inside an extra nesting level, or cut after a
+    lone backslash."""
+    pieces = [b"a", b"Z", b" ", b"\x00", b"\xe9", b"\r", b"\n", b"%", b"<", b">",
+              b"/", b"[", b"\\n", b"\\r", b"\\t", b"\\b", b"\\f", b"\\(", b"\\)",
+              b"\\\\", b"\\q", b"\\7", b"\\53", b"\\101", b"\\777", b"\\0015",
+              b"\\\r", b"\\\n", b"\\\r\n", b"\\\n\r"]
+
+    def body(depth):
+        out = b""
+        for _ in range(rng.randrange(8)):
+            if depth < 3 and rng.random() < 0.15:
+                out += b"(" + body(depth + 1) + b")"
+            else:
+                out += rng.choice(pieces)
+        return out
+
+    b = b"(" + body(0)
+    end = rng.randrange(4)
+    if end == 0:
+        return b + b")", True
+    if end == 1:
+        return b, False
+    if end == 2:
+        return b + b"(" + body(1) + b")", False
+    return b + b"\\", False
+
+
+def _random_hex(rng):
+    """-> (token bytes, clean?) — hex digits of either case and odd counts,
+    PDF whitespace, sometimes a byte that is neither; closed or cut."""
+    chars = b"0123456789abcdefABCDEF \t\r\n\x0c\x00"
+    digits = bytes(rng.choice(chars) for _ in range(rng.randrange(10)))
+    clean = True
+    if rng.random() < 0.3:
+        i = rng.randrange(len(digits) + 1)
+        digits = digits[:i] + bytes([rng.choice(b"gQz.(/%+-\xff")]) + digits[i:]
+        clean = False
+    return b"<" + digits + (b">" if rng.random() < 0.8 else b""), clean
+
+
+def _random_name(rng):
+    """-> token bytes — a name with #xx escapes, truncated #x at the end,
+    non-hex after #, and raw high bytes; ended by a delimiter or EOF."""
+    pieces = [b"A", b"z", b"1", b"-", b".", b"#20", b"#41", b"#e9", b"#2F", b"#",
+              b"#4", b"#zz", b"#g1", b"\xc3\xa9", b"\xff"]
+    name = b"/" + b"".join(rng.choice(pieces) for _ in range(rng.randrange(6)))
+    return name + rng.choice([b"", b" ", b"/B", b"(x)", b"<00>", b"[", b"%c"])
+
+
+def test_file_and_content_lexers_agree():
+    """The file layer's object parser and the content-stream tokenizer scan
+    the same §7.3 tokens: equal values wherever the file parser returns; it
+    raises ValueError exactly for an unterminated literal string or a hex
+    string holding a byte that is neither hex nor whitespace; the tokenizer
+    repairs both and never raises."""
+    import random
+
+    import pytest
+
+    from docling_parse_spark.pdf.file import _Lexer
+    from docling_parse_spark.pdf.tokenizer import Lexer
+
+    rng = random.Random(20260418)
+    kinds = {"str": 0, "name": 0, "raise": 0}
+    for _ in range(6000):
+        pick = rng.randrange(3)
+        if pick == 0:
+            tok, ok = _random_literal(rng)
+        elif pick == 1:
+            tok, ok = _random_hex(rng)
+        else:
+            tok, ok = _random_name(rng), True
+        tok = rng.choice([b"", b" ", b"\r\n\t", b"%note\n", b"% a\r \x00"]) + tok
+        kind, val = Lexer(tok).next_token()
+        assert kind == ("name" if pick == 2 else "str"), tok
+        if ok:
+            assert _Lexer(tok).parse_object() == val, tok
+        else:
+            with pytest.raises(ValueError):
+                _Lexer(tok).parse_object()
+            kinds["raise"] += 1
+        kinds[kind] += 1
+    assert min(kinds.values()) > 500, kinds
